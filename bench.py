@@ -594,9 +594,9 @@ def orchestrate() -> None:
         # Exchange serialization two stages deep on an 89 ms DuckDB
         # denominator; whole-set datapath < 1x DuckDB; plan shape pinned by
         # tests/test_plans.py::test_join_revenue_broadcasts_dims_not_facts.
-        # r12 closure A/B (tools/ab_jr_intkey_r12.py): int-key agg,
-        # cents pre-agg, and explicit projection all measured neutral or
-        # worse. Evidence: PERF.md s67.
+        # r12 closure A/B (`git show e396564:tools/ab_jr_intkey_r12.py`):
+        # int-key agg, cents pre-agg, and explicit projection all measured
+        # neutral or worse. Evidence: PERF.md s67.
         "join_revenue_by_nation": "PERF.md s67",
     }
     dp_adjudicated = {

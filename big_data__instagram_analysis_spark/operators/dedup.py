@@ -114,7 +114,8 @@ def shingle_rows(
     shifted ``slice``s + one explode: the same in-row bulk array kernels,
     but NO doc-keyed window — so no token-wide sort, and the (doc, shingle)
     dedup happens partition-locally (partial aggregate BEFORE any
-    exchange). A/B at sf0.1 (tools/ab_shingle_zip_r12.py): shingle pass
+    exchange). A/B at sf0.1 (`git show e396564:tools/ab_shingle_zip_r12.py`):
+    shingle pass
     0.52 → 0.40 s, the shingle_pair_ppm consumer chain 2.20 → 1.76 s,
     identical 260,388-row output set. At 100 TB the win is structural: the
     old form shuffled EVERY token to the doc window; this form shuffles

@@ -1986,9 +1986,12 @@ def hll_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds the distinct (type, user) table (lazily checkpointed, a few
     hundred rows); both sketches ride it (HLL register updates are
     idempotent, so sketch(distinct stream) ≡ sketch(raw stream)
-    bit-for-bit), the union estimate is hll_union sketch-MERGE (register
-    max ≡ single-pass union sketch — the mergeability this query
-    showcases), the exacts are two tiny aggregates (intersection = users
+    bit-for-bit), the union estimate is hll_union sketch-MERGE — the
+    mergeability this query showcases; it is estimate-equivalent to a
+    single-pass union sketch within the sketch's own error, not
+    bit-for-bit, since DataSketches' list/set/dense mode transitions can
+    differ between the two and the pinned boolean's 10% tolerance absorbs
+    that — the exacts are two tiny aggregates (intersection = users
     holding both type rows), and everything lands lazily via the house
     1-row crossJoin scalars — no eager job at construction.
     """

@@ -94,9 +94,10 @@ def join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation⋈region collapses to a filtered broadcast dim before touching the
     facts; the ASIA filter prunes 4/5 of customers early. The lineitem join
     carries a SHUFFLE_HASH hint on the c⋈o side (round-6 ABAB,
-    tools/ab_jr_nohint_r6.py + PERF.md §39): without it the static planner
-    broadcasts LINEITEM — its pruned-scan estimate sits under the 10 MB
-    threshold at bench tier, so the plan builds a 600 k-row hash relation
+    `git show e396564:tools/ab_jr_nohint_r6.py` + PERF.md §39): without it
+    the static planner broadcasts LINEITEM — its pruned-scan estimate sits
+    under the 10 MB threshold at bench tier, so the plan builds a 600 k-row
+    hash relation
     and probes it with the ~30 k c⋈o rows (0.79 s min; backwards at any
     scale — you never build on the fact table). SHUFFLE_HASH builds on the
     smaller per-partition c⋈o side instead (0.58 s min, ties the forced-
@@ -303,7 +304,8 @@ def json_extract_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     is lazy in codegen and nullif('')→ANSI-safe cast makes "fast path
     missed" and "fallback must run" the same null, so the regex runs ONCE
     per row. Adversarially verified equal to pure from_json on 13 hostile
-    shapes and on the full fixture (tools/ab_json_extract_r11.py).
+    shapes and on the full fixture
+    (`git show e396564:tools/ab_json_extract_r11.py`).
 
     Why not from_json alone: the bench-tier events file is one 2 MB scan
     split, so the parse stage is a single task; a Jackson struct parse per

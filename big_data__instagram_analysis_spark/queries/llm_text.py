@@ -330,7 +330,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13 (guide §4.1, the bpe_pair_counts class): shingles come from
     arrays_zip of five shifted slices + explode, so every md5 runs as ONE
     codegen'd call per row instead of inside an interpreted `transform`
-    lambda (ABAB at sf0.1, tools/ab_docfp_r13.py: 2.09 → 1.10 s, −47%).
+    lambda (ABAB at sf0.1, `git show e396564:tools/ab_docfp_r13.py`:
+    2.09 → 1.10 s, −47%).
     The min-per-doc groupBy partially aggregates map-side — each doc's
     tokens live in one row, hence one partition, so the exchange carries
     exactly ONE 16-byte row per document, corpus-size-proportional only in
@@ -762,8 +763,8 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     built with transform/element_at — an INTERPRETED higher-order-function
     chain, 4.95 s/pass at sf0.1. arrays_zip of two shifted slices produces
     the identical pairs through bulk array kernels: 1.10 s
-    (tools/ab_hof_pairs_r12.py, output asserted identical). Same zero-
-    shuffle shape, ~4.5x less per-task work.
+    (`git show e396564:tools/ab_hof_pairs_r12.py`, output asserted
+    identical). Same zero-shuffle shape, ~4.5x less per-task work.
     """
     d = load(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
@@ -1379,7 +1380,8 @@ def _winnow_selected_arrow(
     DISTINCT selected packed keys in ascending-key order rather than
     first-occurrence order — every consumer (sum/min/max/size aggregates,
     explode-to-set) is order-insensitive, and the A/B tool
-    (tools/ab_winnow_arrow_r13.py) pins set equality per document.
+    (`git show e396564:tools/ab_winnow_arrow_r13.py`) pins set equality per
+    document.
 
     Only (doc_id, extra_cols, text) cross the Python boundary (§4.1:
     explicit select before an opaque operator), and each batch is one
@@ -1477,7 +1479,8 @@ def _winnow_selected_arrow(
 
 
 #: Active winnow core: the Arrow/NumPy kernel. r13 ABAB at sf0.1
-#: (tools/ab_winnow_arrow_r13.py, 4 alternated reps, one session):
+#: (`git show e396564:tools/ab_winnow_arrow_r13.py`, 4 alternated reps, one
+#: session):
 #: winnow_fingerprints 2.79→1.69 s (−39%), winnow_match_pairs 3.41→2.69 s
 #: (−21%), ingest_neardup_gate 2.82→2.38 s (−16%). Both forms produce the
 #: identical per-doc (n_grams, fph-set) frame (set equality pinned by the

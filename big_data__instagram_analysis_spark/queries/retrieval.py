@@ -197,9 +197,9 @@ def bm25_rational_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     task, so the map-side partial count collapses to ~1 row per doc before
     the shuffle. Round 13 tried two in-row doclen forms to drop the explode
     (filter(lambda)+size, then regexp_count of [a-z0-9]{3,} runs — see
-    tools/ab_bm25_r13.py); both measured SLOWER (1.21 vs 1.62 s ABAB min)
-    because the in-row regex work costs more CPU than the already-collapsed
-    exchange saves — declined with numbers. Top-20 finishes with
+    `git show e396564:tools/ab_bm25_r13.py`); both measured SLOWER (1.21 vs
+    1.62 s ABAB min) because the in-row regex work costs more CPU than the
+    already-collapsed exchange saves — declined with numbers. Top-20 finishes with
     TakeOrderedAndProject.
     """
     tok = _tokens(spark, sf_dir)

@@ -234,7 +234,8 @@ def run_available_now(
     # r13 (VERDICT r12 #6, guide §1.4/§5) — sink-accumulation lever MEASURED
     # AND DECLINED: a localCheckpoint-then-dropTempView variant (pin the
     # final rows, free the catalog entry) was pass-level ABAB'd over the
-    # full 19-query stream tail in one session (tools/ab_sink_drop_r13.py):
+    # full 19-query stream tail in one session
+    # (`git show e396564:tools/ab_sink_drop_r13.py`):
     # old min 67.8 s vs variant 68.8 s (+1.5%, means 70.3 vs 73.3). The
     # accumulated sink tables are post-aggregation small, so the r12
     # "memory-sink accumulation" spike hypothesis does not reproduce — the

@@ -258,7 +258,8 @@ def test_json_extract_k_fastpath_matches_from_json_adversarial(spark):
     a pure from_json parse on every hostile props shape — nested objects,
     float/string/null values, int32 overflow, lookalike keys, malformed
     JSON, NULL — not just the flat fixture grammar. This pins the exactness
-    argument in the query docstring (tools/ab_json_extract_r11.py)."""
+    argument in the query docstring
+    (`git show e396564:tools/ab_json_extract_r11.py`)."""
     from pyspark.sql import functions as F
 
     adv = spark.createDataFrame(

@@ -13,12 +13,12 @@ With --write-budget, records the measured times as the new baseline.
 """
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
-import duckdb
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from driver_util import driver_session, filter_only
 
 ap = argparse.ArgumentParser()
 ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -35,15 +35,7 @@ ap.add_argument(
 )
 args = ap.parse_args()
 
-# Hostile driver session: different timezone, no tuning, default confs
-builder = (SparkSession.builder.master("local[8]")
-           .appName("driver-sim")
-           .config("spark.sql.session.timeZone", "America/New_York")
-           .config("spark.ui.enabled", "false"))
-if args.driver_memory:
-    builder = builder.config("spark.driver.memory", args.driver_memory)
-spark = builder.getOrCreate()
-spark.sparkContext.setLogLevel("ERROR")
+spark = driver_session(args.driver_memory)
 
 import __spark_entry__ as entrymod
 
@@ -55,12 +47,11 @@ assert len(rows) > 0
 
 # 2. correctness at --sf, driver-style
 sf = args.sf
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+from big_data__instagram_analysis_spark.oracle import compare_frames, duck_connect
+
+con = duck_connect(sf)
 qs, os_ = entrymod.queries(), entrymod.oracle_sql()
 print("declared queries:", len(qs), "with oracle:", len(os_), "sf:", sf)
-from big_data__instagram_analysis_spark.oracle import compare_frames
 
 budgets = json.load(open(args.budget)) if args.budget else {}
 fails = 0
@@ -71,8 +62,6 @@ if args.only:
     # comma-joined invocation matched 0 queries and the run printed
     # "FAILS: 0" as if everything passed. filter_only makes a zero-match
     # run loud and a hard failure (logic + test in tools/driver_util.py).
-    from driver_util import filter_only
-
     qs, only_err = filter_only(qs, args.only)
     print("only-filter:", args.only, "->", len(qs), "queries")
     if only_err:
@@ -108,9 +97,7 @@ if args.write_budget:
     # other query's budget, turning the time-budget gate off for them.
     out_budget = measured
     if args.only:
-        import os as _os
-
-        if _os.path.exists(args.write_budget):
+        if os.path.exists(args.write_budget):
             with open(args.write_budget) as fh:
                 out_budget = json.load(fh)
             out_budget.update(measured)
