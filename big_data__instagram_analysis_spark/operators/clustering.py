@@ -1,22 +1,26 @@
-"""Lloyd's k-means as pure DataFrame algebra (deterministic, no MLlib).
+"""Lloyd's k-means as one fused Arrow pass per round (deterministic, no MLlib).
 
 E8's IVF tier uses pyspark.ml's KMeans; this module is the from-scratch
 loop, kept because the ITERATION SHAPE is the teachable scale pattern
 (same family as operators/graph.py's CC and PageRank):
 
-  assign   — one Arrow mapInPandas pass over the vectors with the k-row
-             centroid matrix in a task broadcast: numpy computes all k
-             squared distances and the argmin per batch. No shuffle of
-             vectors. (Rounds 1-3 used a broadcast crossJoin with a
-             zip_with/aggregate HOF distance — HOFs are interpreted, not
-             codegen, and the k× row expansion measured ~1.3 s/iteration
-             at sf0.1 vs ~0.2 s for the Arrow pass; same lesson as
-             PERF.md §5's embedding_cosine_neardup.)
-  update   — per-cluster dimension-wise mean via posexplode + (cid, pos)
-             aggregation: one shuffle of k×dims cells, never vectors.
-  centroid table stays k×dims — collected to the driver each round (tiny
-             by construction) and re-broadcast, which also truncates plan
-             lineage the way localCheckpoint does for CC.
+  round    — one mapInPandas pass and one collect(). Each Arrow batch
+             computes all k squared distances and the argmin in NumPy,
+             then folds assign and update into the same pass: it emits at
+             most k partial rows (cluster_id, n, s, sse) — the member
+             count, the vector sum and the squared-distance sum of each
+             non-empty cluster in the batch. Vectors never shuffle and
+             never leave their task; the driver sums the partials, in
+             collect order so the result is deterministic. This is
+             MLlib KMeans' per-partition-sums shape and RaSQL's "one pass
+             per round with the aggregate folded in" (the earlier cached
+             assign pass + inertia job + posexplode (cid, pos) shuffle
+             cost 8 jobs per round, nearly all of it job overhead).
+  update   — centroid = s / n; an empty cluster keeps its previous one.
+  centroids — the k×dims matrix (independent of corpus size) is bound
+             into each pass's function with functools.partial and ships
+             with the task, so there is no broadcast to destroy and no
+             cache to unpersist: nothing outlives the call.
 
 Determinism: init = the k vectors with the smallest ids (not RNG), and
 the argmin tie-breaks on cluster id — so runs are reproducible and the
@@ -25,12 +29,53 @@ inertia sequence is a testable monotone invariant (Lloyd's guarantee).
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from functools import partial
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_PARTIALS = "cluster_id int, n long, s array<double>, sse double"
+
+
+def _nearest(b: pd.DataFrame, cen: np.ndarray):
+    """(vectors, argmin cluster ids, squared distance to that centroid)."""
+    m = np.stack(b["vec"].to_numpy()).astype(np.float64)
+    d2 = ((m[:, None, :] - cen[None, :, :]) ** 2).sum(axis=2)
+    # np.argmin returns the FIRST minimum → the lowest cluster id wins a tie.
+    cid = np.argmin(d2, axis=1)
+    return m, cid, d2[np.arange(len(m)), cid]
+
+
+def _round_partials(batches: Iterator[pd.DataFrame], cen: np.ndarray):
+    """Per batch, one (cluster_id, n, s, sse) row per non-empty cluster."""
+    for b in batches:
+        if b.empty:
+            continue
+        m, cid, d = _nearest(b, cen)
+        ids = np.unique(cid)
+        members = [cid == c for c in ids]
+        yield pd.DataFrame(
+            {
+                "cluster_id": ids.astype(np.int32),
+                "n": [int(k.sum()) for k in members],
+                "s": [m[k].sum(axis=0) for k in members],
+                "sse": [float(d[k].sum()) for k in members],
+            }
+        )
+
+
+def _assignments(batches: Iterator[pd.DataFrame], cen: np.ndarray):
+    """(vid, cluster_id, sq_dist) for every vector."""
+    for b in batches:
+        if b.empty:
+            continue
+        _, cid, d = _nearest(b, cen)
+        yield pd.DataFrame(
+            {"vid": b["vid"], "cluster_id": cid.astype(np.int32), "sq_dist": d}
+        )
 
 
 def kmeans_lloyd(
@@ -40,105 +85,38 @@ def kmeans_lloyd(
     vec_col: str = "embedding",
     k: int = 8,
     iterations: int = 3,
-) -> tuple[DataFrame, list[float], Callable[[], None]]:
-    """Run ``iterations`` Lloyd rounds; return (assignments, inertia, release).
+) -> tuple[DataFrame, list[float]]:
+    """Run ``iterations`` Lloyd rounds; return (assignments, inertia).
 
-    Assignments: (id, cluster_id, sq_dist). Inertia is recorded AFTER each
-    assignment step (sum of squared distances to the current centroids) —
-    Lloyd guarantees the sequence is non-increasing.
-
-    RELEASE CONTRACT: the returned frame's plan references the final
-    round's cached assignment and centroid broadcast, which this function
-    intentionally leaves alive (eviction would re-run the Arrow scoring
-    pass). The caller owns them: call ``release()`` once done with the
-    returned frame's actions, or every invocation on a long-running
-    driver accumulates one cached DataFrame + one live broadcast — the
-    same leak class the loop body destroys for superseded rounds.
+    Assignments: a lazy (vid, cluster_id, sq_dist) frame against the LAST
+    round's input centroids. Inertia is recorded after each assignment
+    step (sum of squared distances to that round's centroids) — Lloyd
+    guarantees the sequence is non-increasing. Spark jobs: one for the
+    init, one per round.
     """
-    spark = vectors.sparkSession
     v = vectors.select(
         F.col(id_col).alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
     )
-    init = [
-        [float(x) for x in r["vec"]]
-        for r in v.orderBy("vid").limit(k).collect()
-    ]
-    centroids = [(i, init[i]) for i in range(len(init))]
+    cen = np.array(
+        [r["vec"] for r in v.orderBy("vid").limit(k).collect()], dtype=np.float64
+    )
     inertia: list[float] = []
-    assigned = None
-    prev_bc = None
-    prev_assigned = None
+    last = cen
     for _ in range(iterations):
-        cmat = np.array([cen for _, cen in centroids], dtype=np.float64)
-        bc = spark.sparkContext.broadcast(cmat)
-
-        # Default-arg binding pins THIS round's broadcast: the returned
-        # frame's lazy plan would otherwise see the loop variable's final
-        # value through the closure.
-        def assign_batches(
-            batches: Iterator[pd.DataFrame], _bc=bc
-        ) -> Iterator[pd.DataFrame]:
-            cen = _bc.value
-            for b in batches:
-                if b.empty:
-                    continue
-                m = np.stack(b["vec"].to_numpy()).astype(np.float64)
-                d2 = ((m[:, None, :] - cen[None, :, :]) ** 2).sum(axis=2)
-                # np.argmin returns the FIRST minimum → lowest cluster id,
-                # matching the previous min_by(cid, struct(d, cid)) tiebreak.
-                cid = np.argmin(d2, axis=1)
-                yield pd.DataFrame(
-                    {
-                        "vid": b["vid"],
-                        "vec": b["vec"],
-                        "cluster_id": cid.astype(np.int32),
-                        "sq_dist": d2[np.arange(len(m)), cid],
-                    }
-                )
-
-        # Persist: the assign pass feeds THREE actions (inertia collect,
-        # the means aggregation, and — on the last round — whatever the
-        # caller does with the returned frame). Without the cache each
-        # action re-runs the Arrow scoring pass from the parquet scan.
-        assigned = v.mapInPandas(
-            assign_batches,
-            "vid long, vec array<double>, cluster_id int, sq_dist double",
-        ).persist()
-        inertia.append(assigned.agg(F.sum("sq_dist")).collect()[0][0])
-        means = (
-            assigned.select("cluster_id", F.posexplode("vec").alias("pos", "val"))
-            .groupBy("cluster_id", "pos")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("cluster_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cen")
-            )
-            .collect()
-        )
-        # Empty clusters keep their previous centroid (standard fallback).
-        new_c = dict(centroids)
-        for r in means:
-            new_c[r["cluster_id"]] = [float(x) for x in r["cen"]]
-        centroids = sorted(new_c.items())
-        # Superseded round's broadcast + cache are dead once this round's
-        # two actions finished; on a long-running driver leaving them
-        # around is an executor/driver memory leak. The LAST round's stay
-        # alive — the returned frame's plan references them (cache
-        # eviction would re-run assign_batches, which reads the broadcast).
-        if prev_bc is not None:
-            prev_bc.destroy()
-        if prev_assigned is not None:
-            prev_assigned.unpersist()
-        prev_bc, prev_assigned = bc, assigned
-
-    final_bc, final_assigned = prev_bc, prev_assigned
-
-    def release() -> None:
-        final_assigned.unpersist()
-        final_bc.destroy()
-
-    return assigned.select("vid", "cluster_id", "sq_dist"), inertia, release
+        n = np.zeros(len(cen), dtype=np.int64)
+        s = np.zeros_like(cen)
+        sse = 0.0
+        for r in v.mapInPandas(partial(_round_partials, cen=cen), _PARTIALS).collect():
+            n[r["cluster_id"]] += r["n"]
+            s[r["cluster_id"]] += r["s"]
+            sse += r["sse"]
+        inertia.append(sse)
+        last, cen = cen, cen.copy()
+        cen[n > 0] = s[n > 0] / n[n > 0, None]
+    return (
+        v.mapInPandas(
+            partial(_assignments, cen=last), "vid long, cluster_id int, sq_dist double"
+        ),
+        inertia,
+    )

@@ -10,7 +10,7 @@ candidate generation is always key-bucketed (hash group, LSH band, SimHash
 band) so the pair space is per-bucket quadratic, never global quadratic.
 
 Retention note (ADVICE r7): the shingle-sharing operators below use
-``localCheckpoint(eager=False)`` frames that live in block-manager storage
+``localCheckpoint`` frames that live in block-manager storage
 until the DataFrame is garbage-collected driver-side. In a batch/bench
 context (fresh session per run, or the bench tools' per-query GC) that is
 the intended lifetime; a LONG-LIVED service invoking these repeatedly
@@ -198,15 +198,21 @@ def ngram_jaccard_pairs(
     # shingle_rows: the zip-slice exploded-row shingling (equivalence
     # fuzz-pinned against token_shingles) — the HOF array form measured ~5x
     # slower at sf0.1 and this operator only needs the exploded rows.
-    # Three consumers (sizes + both self-join sides) share ONE lazy
+    # Three consumers (sizes + both self-join sides) share ONE
     # localCheckpoint materialization of the shingle rows instead of
     # re-running the scan+window shingling per lineage branch (ABAB
     # ~10% on the minhash twin at sf0.1; memory-and-disk storage, a
     # deliberate spill-for-recompute trade on a 3x-reused frame).
+    # Eager, not lazy: AQE runs the sizes broadcast and the self-join
+    # shuffle as concurrent stages over this frame, and a lazy checkpoint
+    # cuts its lineage when the FIRST job ends; the still-running stage
+    # then reports metrics for accumulators the ContextCleaner has dropped
+    # (DAGScheduler "non-existent accumulator" ERROR traces, PERF.md §75).
+    # curation_pipeline ABAB at par.
     sh = (
         shingle_rows(df, text_col=text_col, id_col=id_col, n=n)
         .select(F.col(id_col).alias("doc"), "s")
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")

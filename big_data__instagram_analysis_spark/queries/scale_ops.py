@@ -1047,9 +1047,10 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     init) over the embeddings — the iterative-ML loop as DataFrame
     algebra (operators/clustering.py).
 
-    Per round: assignment is an Arrow mapInPandas pass with the k-row
-    centroid matrix in a task broadcast (vectors never shuffle); update
-    shuffles only k×64 mean cells.
+    Per round: one Arrow mapInPandas pass assigns every vector and emits
+    per-batch (count, vector sum, squared-distance sum) partials per
+    cluster, then one collect of those few rows; vectors never shuffle and
+    the k×64 centroid matrix rides in the task closure.
 
     Hash-checked via the certified-property pattern: float argmin
     near-ties make cluster MEMBERSHIP engine-sensitive (no hash-portable
@@ -1062,23 +1063,14 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_lloyd
 
     emb = load(spark, sf_dir, "embeddings")
-    assigned, inertia, release = kmeans_lloyd(emb, k=8, iterations=3)
+    assigned, inertia = kmeans_lloyd(emb, k=8, iterations=3)
     monotone = all(
         a >= b - 1e-6 for a, b in zip(inertia, inertia[1:])
     )
-    # Materialize the 1-row certificate eagerly so the final round's cache
-    # + broadcast can be released here (kmeans_lloyd's release contract)
-    # instead of leaking one cached frame per invocation on a long-running
-    # driver. The returned in-memory frame carries no lineage into them.
-    row = assigned.agg(
+    return assigned.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_assigned"),
         (F.count_distinct("cluster_id") <= 8).alias("k_within_bound"),
         F.lit(monotone).alias("inertia_monotone"),
-    ).collect()[0]
-    release()
-    return spark.createDataFrame(
-        [row],
-        "n_assigned bigint, k_within_bound boolean, inertia_monotone boolean",
     )
 
 

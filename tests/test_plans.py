@@ -448,11 +448,10 @@ def test_kmeans_assign_is_arrow_map_not_hof_join(spark, sf_dir):
     from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
 
     emb = load(spark, sf_dir, "embeddings")
-    assigned, _, release = kmeans_lloyd(emb, k=4, iterations=1)
+    assigned, _ = kmeans_lloyd(emb, k=4, iterations=1)
     plan = spark._jvm.PythonSQLUtils.explainString(
         assigned._jdf.queryExecution(), "formatted"
     )
-    release()
     assert "MapInPandas" in plan, plan[:600]
     assert "Join" not in plan, plan[:600]
 

@@ -8,10 +8,12 @@ plans the operators must keep at scale.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from big_data__instagram_analysis_spark.io import load
+from big_data__instagram_analysis_spark.io import DEFAULT_SF_DIR, load
 from big_data__instagram_analysis_spark.operators.bloom import (
     bloom_prune,
     build_bloom,
@@ -327,11 +329,10 @@ def test_kmeans_inertia_monotone_and_coverage(spark, sf_dir):
     from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
 
     emb = load(spark, sf_dir, "embeddings")
-    assigned, inertia, release = kmeans_lloyd(emb, k=8, iterations=3)
+    assigned, inertia = kmeans_lloyd(emb, k=8, iterations=3)
     assert len(inertia) == 3
     assert all(b <= a * (1 + 1e-9) for a, b in zip(inertia, inertia[1:])), inertia
     rows = assigned.collect()
-    release()
     assert len(rows) == emb.count()
     assert {r["cluster_id"] for r in rows} <= set(range(8))
 
@@ -340,12 +341,70 @@ def test_kmeans_deterministic(spark, sf_dir):
     from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
 
     emb = load(spark, sf_dir, "embeddings")
-    a, ia, rel_a = kmeans_lloyd(emb, k=4, iterations=2)
-    b, ib, rel_b = kmeans_lloyd(emb, k=4, iterations=2)
+    a, ia = kmeans_lloyd(emb, k=4, iterations=2)
+    b, ib = kmeans_lloyd(emb, k=4, iterations=2)
     assert ia == ib
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    rel_a()
-    rel_b()
+
+
+def _numpy_lloyd(sf_dir, k, iterations):
+    """Reference Lloyd: lowest-vec_id init, mean update, empty clusters keep
+    their centroid; returns ({vid: cluster_id} of the last round, inertia)."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
+    df = t.to_pandas().sort_values("vec_id")
+    m = np.stack(df["embedding"].to_numpy()).astype(np.float64)
+    cen = m[:k].copy()
+    inertia = []
+    for _ in range(iterations):
+        d2 = ((m[:, None, :] - cen[None, :, :]) ** 2).sum(axis=2)
+        cid = np.argmin(d2, axis=1)
+        inertia.append(float(d2[np.arange(len(m)), cid].sum()))
+        assign = dict(zip(df["vec_id"].tolist(), cid.tolist()))
+        for c in range(k):
+            if (cid == c).any():
+                cen[c] = m[cid == c].mean(axis=0)
+    return assign, inertia
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_kmeans_matches_numpy_reference(spark, sf):
+    """The fused per-batch partial sums are the same Lloyd as a plain NumPy
+    loop: identical last-round assignments, inertia within 1e-9 relative."""
+    from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
+
+    sf_dir = os.path.join(os.path.dirname(DEFAULT_SF_DIR), sf)
+    assigned, inertia = kmeans_lloyd(load(spark, sf_dir, "embeddings"), k=8, iterations=3)
+    ref_assign, ref_inertia = _numpy_lloyd(sf_dir, k=8, iterations=3)
+    assert {r["vid"]: r["cluster_id"] for r in assigned.collect()} == ref_assign
+    assert len(inertia) == len(ref_inertia) == 3
+    for got, want in zip(inertia, ref_inertia):
+        assert got == pytest.approx(want, rel=1e-9)
+
+
+def test_kmeans_one_job_per_round_and_nothing_held(spark, sf_dir):
+    """kmeans_lloyd launches the init job plus one job per round (counted by
+    global job id, as perfbench's JobProbe does) and leaves no persisted
+    frame behind."""
+    from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def next_job_id(start=0):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        while tracker.getJobInfo(start) is not None:
+            start += 1
+        return start
+
+    emb = load(spark, sf_dir, "embeddings")
+    persisted = sc._jsc.getPersistentRDDs().size()
+    before = next_job_id()
+    kmeans_lloyd(emb, k=8, iterations=3)
+    assert next_job_id(before) - before <= 3 + 1
+    assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_weighted_sample_deterministic_and_biased(spark, sf_dir):
