@@ -119,6 +119,37 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-held rows that plans as a ``LocalTableScan``.
+
+    ``spark.createDataFrame(list_of_tuples, ddl)`` pickles the rows into a
+    ``parallelize``: executing that frame runs ``defaultParallelism`` Python
+    worker tasks, each paying the worker's fixed per-task start-up (≈0.2 s
+    of CPU on a 4-vCPU box, PERF.md §76) although no Python code runs in
+    them. A ``pyarrow.Table`` takes PySpark's Arrow path whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says, and below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by default)
+    the JVM turns it into a ``LocalRelation``: no Python worker runs, and
+    the planner sees the frame's exact size.
+
+    ``rows`` is a sequence of tuples in ``schema`` order; ``schema`` is a
+    DDL string or a ``StructType`` (its nullability flags are kept). This
+    is the package's only ``createDataFrame`` call (tests/test_local_frame.py).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, StructType
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def scratch_dir(sub: str = "") -> str:
     """Writable scratch under the repo (we must not touch paths outside it)."""
     base = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")

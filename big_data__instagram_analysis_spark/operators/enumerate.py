@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..io import local_frame
+
 
 def global_row_numbers(
     df: DataFrame, order_cols: list[str], *, num_partitions: int = 8,
@@ -41,7 +43,7 @@ def global_row_numbers(
     for pid, cnt in counts:
         offsets.append((pid, acc))
         acc += cnt
-    off_df = df.sparkSession.createDataFrame(offsets, "_pid int, _offset bigint")
+    off_df = local_frame(df.sparkSession, offsets, "_pid int, _offset bigint")
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     return (
         with_pid.join(F.broadcast(off_df), "_pid")

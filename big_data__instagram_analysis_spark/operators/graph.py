@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..io import local_frame
+
 #: Canonical-edge count under which the component closure finishes on the
 #: driver instead of running distributed star rounds. A bounded local finish
 #: is the standard last mile of MapReduce CC (Kiveris et al. §6 run the tail
@@ -173,7 +175,12 @@ def connected_components(
             labels = _local_components(
                 zip(pdf["a"].tolist(), pdf["b"].tolist())
             )
-            return e.sparkSession.createDataFrame(labels, schema=label_schema)
+            # ≤ 2 × local_threshold label rows (≈6 MB at the default bound,
+            # under Arrow's 48 MB localRelationThreshold) go back as a
+            # LocalTableScan. The pickled createDataFrame path ran
+            # defaultParallelism Python worker tasks, ≈0.2 s of CPU each,
+            # on every execution of the caller's query (PERF.md §76).
+            return local_frame(e.sparkSession, labels, label_schema)
         nbrs = e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
             e.select(F.col("b").alias("u"), F.col("a").alias("v"))
         )
@@ -299,7 +306,7 @@ def bfs_levels(
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     spark = edges.sparkSession
-    root = spark.createDataFrame([(int(source), 0)], "node long, dist int")
+    root = local_frame(spark, [(int(source), 0)], "node long, dist int")
     visited = root.localCheckpoint(eager=True)
     frontier = visited
     for depth in range(1, max_depth + 1):

@@ -4,9 +4,12 @@ tokenized batches — corpus-frequency boilerplate detection (C4-style),
 within-document repetition scoring (Gopher-style), and sequence packing.
 
 All three stay JVM-side: tokenization and n-gramming are higher-order array
-functions inside whole-stage codegen (no Python in the hot path), the
-boilerplate document-frequency table is one shuffle, and packing is a
-per-shard prefix sum.
+functions (no Python in the hot path), the boilerplate document-frequency
+table is one shuffle, and packing is a per-shard prefix sum. The HOFs are
+interpreted, not compiled: the executed plans show the Filter and Project
+that carry ``filter``/``transform`` outside whole-stage codegen (no ``*``).
+A codegen-able ``array_remove``/``arrays_zip`` form showed no gain when
+sized (PERF.md §76), so the HOF form stays.
 """
 
 from __future__ import annotations

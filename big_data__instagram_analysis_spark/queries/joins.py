@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, local_frame
 from ..numeric import cents_sum
 from ..operators.asof import asof_join
 from ..registry import query
@@ -154,10 +154,12 @@ ORDER BY b.band
 )
 def range_join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band (interval) join: fact value routed into an in-memory band dim
-    (also exercises S4 createDataFrame source). The band table is broadcast,
-    so the non-equi predicate never becomes a shuffled NLJ at scale."""
+    (also exercises the S4 in-memory source, ``io.local_frame``). The band
+    table is broadcast, so the non-equi predicate never becomes a shuffled
+    NLJ at scale."""
     e = load(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [
             ("xs", 0.0, 25.0),
             ("s", 25.0, 75.0),
@@ -348,7 +350,8 @@ def nullsafe_join_status_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         F.expr("nullif(o_orderstatus, 'P')").alias("k"), "o_totalprice"
     )
-    d = spark.createDataFrame(
+    d = local_frame(
+        spark,
         [("F", "finished"), ("O", "open"), (None, "pending-unknown")],
         "dk string, label string",
     )

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, local_frame
 from ..registry import query
 
 # --- E251: Count-Min sketch ------------------------------------------------
@@ -363,7 +363,7 @@ def gram_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Degenerate empty corpus: the oracle's recursive CTE chain yields
         # 0 rows (its y1 join against an empty Gram is empty), so the
         # engine must too — not 64 zero loadings (ADVICE r12).
-        return spark.createDataFrame([], "pos int, loading long")
+        return local_frame(spark, [], "pos int, loading long")
     G: dict = {}
     for row in cells:
         G[(row["i"], row["j"])] = row["v"]
@@ -385,6 +385,7 @@ def gram_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         if xi != 0:
             s = -1 if xi < 0 else 1
             break
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, x[i] * s) for i in range(GRAM_DIM)], "pos int, loading long"
     ).orderBy("pos")

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, local_frame
 from ..operators.dedup import (
     SIMHASH_BITS,
     exact_dedup,
@@ -1148,11 +1148,14 @@ def ngram_jaccard_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle: 0.08% at sf0.1 (wall-neutral, this corpus's shingles are
     # dense), 36% at sf0.01; real crawl corpora run 60-90% unique
     # shingles, which is where the shuffle savings land at 100 TB.
+    # Eager: AQE runs this frame's consumers as concurrent stages, and a
+    # lazy checkpoint would cut their lineage under them (DAGScheduler
+    # "non-existent accumulator" traces, PERF.md §75-76).
     keep = (
         sh.withColumn("df", F.count(F.lit(1)).over(_W.partitionBy("s")))
         .where(F.col("df") <= NGRAM_DF_CAP)
         .select("doc_id", "s", "df")
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     sizes = keep.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     pairable = keep.where(F.col("df") >= 2)
@@ -1570,7 +1573,7 @@ def minhash_banding_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_hits"),
         )
     )
-    cfg = spark.createDataFrame(configs, "b int, r int")
+    cfg = local_frame(spark, configs, "b int, r int")
     return (
         cfg.crossJoin(F.broadcast(n_truth))  # 1-row scalar idiom
         .join(F.broadcast(per), ["b", "r"], "left")

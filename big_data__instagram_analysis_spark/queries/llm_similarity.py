@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, local_frame
 from ..operators.similarity import cosine_topk_queries
 from ..registry import query
 
@@ -798,7 +798,8 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
     bc = spark.sparkContext.broadcast((cent_ids, cmat))
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(int(r.vec_id), [float(x) for x in r.embedding]) for r in cent_rows],
         "centroid_id long, cvec array<double>",
     )
@@ -1587,6 +1588,6 @@ def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_id", "e",
                 F.least("md", dist_to(row["e"])).alias("md"),
             ).localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        picks, "rank long, vec_id long, dist_q6 double"
+    return local_frame(
+        spark, picks, "rank long, vec_id long, dist_q6 double"
     ).orderBy("rank")

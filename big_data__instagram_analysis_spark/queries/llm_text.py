@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..io import load
+from ..io import load, local_frame
 from ..registry import query
 
 #: Tiny per-language marker lists for the n-gram/stopword language-ID
@@ -1103,7 +1103,8 @@ def dsir_importance_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ct = float(sum(r["c"] for r in cnt_rows))
     dt = float(sum(r["d"] for r in cnt_rows))
     k = float(DSIR_BUCKETS)
-    lam = spark.createDataFrame(
+    lam = local_frame(
+        spark,
         [
             (
                 r["b"],
@@ -1640,11 +1641,14 @@ def winnow_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # comes straight off the (cheap) documents scan instead of a second
     # winnow-core lineage; document frequency is a window count over fp so
     # docfp itself is referenced once. The culled frame is then
-    # localCheckpoint()ed (lazy): nr and both self-join sides reuse ONE
+    # localCheckpoint()ed (eagerly): nr and both self-join sides reuse ONE
     # materialization of the winnow core instead of recomputing the HOF
     # pipeline per lineage branch — the same lineage-truncation idiom as
     # the CC rounds (operators/graph.py), and `rare` is the df-culled
     # fingerprint list (<= df_cap rows per fp), far smaller than the corpus.
+    # Eager: AQE runs this frame's consumers as concurrent stages, and a
+    # lazy checkpoint would cut their lineage under them (DAGScheduler
+    # "non-existent accumulator" traces, PERF.md §75-76).
     ndocs = (
         load(spark, sf_dir, "documents")
         .where(F.length("text") >= _WINNOW_K)
@@ -1660,7 +1664,7 @@ def winnow_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("df") <= F.expr("least(greatest(2, n_docs DIV 50), 100)"))
         )
         .select("doc_id", "fp")
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     nr = rare.groupBy("doc_id").agg(F.count("*").alias("nr"))
     pairs = (

@@ -23,7 +23,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, local_frame
 from ..registry import query
 
 #: whitespace tokens (house idiom, matches curation.py / llm_text.py)
@@ -644,10 +644,13 @@ def consistent_hash_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (s_before, s_after) cross-tab (map-side partial agg — the shuffle
     # carries ≤289 rows) and the three aggregates re-group that. Counts are
     # exact sums of exact counts — identical output.
+    # Eager: AQE runs this frame's consumers as concurrent stages, and a
+    # lazy checkpoint would cut their lineage under them (DAGScheduler
+    # "non-existent accumulator" traces, PERF.md §75-76).
     xt = (
         asg.groupBy("s_before", "s_after")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     bef = xt.groupBy(F.col("s_before").alias("shard")).agg(
         F.sum("cnt").alias("docs_before")
@@ -765,7 +768,8 @@ def zonemap_skip_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("d").alias("lo"), F.max("d").alias("hi"), F.count(F.lit(1)).alias("c")
         )
 
-    pred = spark.createDataFrame(
+    pred = local_frame(
+        spark,
         [(y, f"{y}-01-01", f"{y}-12-31") for y in ZM_YEARS], "y int, plo string, phi string"
     )
     skipped = (F.col("hi") < F.col("plo")) | (F.col("lo") > F.col("phi"))

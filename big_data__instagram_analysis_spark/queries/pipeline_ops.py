@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..io import load
+from ..io import load, local_frame
 from ..operators.dedup import ngram_jaccard_pairs
 from ..registry import query
 
@@ -353,7 +353,7 @@ def bfs_levels_coactivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     source = edges.agg(F.min("src")).collect()[0][0]
     if source is None:  # no co-activity edges (possible on altered fixtures)
-        return spark.createDataFrame([], "user_id bigint, dist int")
+        return local_frame(spark, [], "user_id bigint, dist int")
     from ..operators.graph import bfs_levels
 
     visited = bfs_levels(edges, source, max_depth=_BFS_MAX_DEPTH)

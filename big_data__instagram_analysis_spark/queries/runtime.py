@@ -17,7 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, local_frame
 from ..numeric import cents_sum
 from ..registry import query
 from ..sources.readers_writers import sink_path
@@ -305,7 +305,8 @@ def tablesample_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     legit = (
         sample.join(o, "o_orderkey", "left_anti").count() == 0
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_total, bool(within), bool(legit))],
         "n_total bigint, within_5sigma boolean, all_rows_from_table boolean",
     )

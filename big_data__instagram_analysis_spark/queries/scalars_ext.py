@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, local_frame
 from ..numeric import cents_sum
 from ..registry import query
 
@@ -640,7 +640,7 @@ def unicode_string_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("mixed 漢 text",),
         ("émoji-frei",),
     ]
-    df = spark.createDataFrame(rows, "s string")
+    df = local_frame(spark, rows, "s string")
     return df.select(
         "s",
         F.length("s").cast("int").alias("n_chars"),

@@ -14,7 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load, scratch_dir
+from ..io import load, local_frame, scratch_dir
 from ..numeric import cents_sum
 from ..registry import query
 from ..sources.readers_writers import (
@@ -64,8 +64,10 @@ SELECT * FROM (VALUES ('view', 1, 0.5), ('purchase', 2, 2.0),
 """,
 )
 def inline_values_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-memory source: createDataFrame over literal rows (Arrow path)."""
-    return spark.createDataFrame(
+    """In-memory source: literal rows through ``io.local_frame`` (Arrow
+    path: a LocalTableScan, no Python worker task)."""
+    return local_frame(
+        spark,
         [("view", 1, 0.5), ("purchase", 2, 2.0), ("signup", 3, 1.0), ("error", 4, 0.0)],
         "event_type string, priority int, weight double",
     )
