@@ -9,16 +9,23 @@ Scale notes per operator are in each docstring; the common theme is that
 candidate generation is always key-bucketed (hash group, LSH band, SimHash
 band) so the pair space is per-bucket quadratic, never global quadratic.
 
-Retention note (ADVICE r7): the shingle-sharing operators below use
-``localCheckpoint`` frames that live in block-manager storage
-until the DataFrame is garbage-collected driver-side. In a batch/bench
-context (fresh session per run, or the bench tools' per-query GC) that is
-the intended lifetime; a LONG-LIVED service invoking these repeatedly
-should drop references promptly (storage is reclaimed via the
-ContextCleaner once the frame is unreachable) and accept that checkpoint
-truncation makes the stage non-recomputable on executor loss — the
-standard localCheckpoint trade, chosen here because the frames are
-3×-reused within one query.
+The shared-shingle pair family rests on three operators:
+:func:`materialized_shingles` (the one shingle frame every consumer
+reads), :func:`shingle_pair_counts` (exact per-pair shared counts) and
+:func:`minhash_verified_pairs` (banded LSH candidates with the same exact
+counts). Every shingle-pair metric in the package — Jaccard, containment,
+ppm, the threshold sweep, the df-capped and MinHash variants — is a
+select over one of the two pair cores.
+
+Retention note (ADVICE r7): :func:`materialized_shingles` returns a
+``localCheckpoint`` frame that lives in block-manager storage until the
+DataFrame is garbage-collected driver-side. In a batch/bench context
+(fresh session per run, or the bench tools' per-query GC) that is the
+intended lifetime; a LONG-LIVED service invoking these repeatedly should
+drop references promptly (storage is reclaimed via the ContextCleaner once
+the frame is unreachable) and accept that checkpoint truncation makes the
+stage non-recomputable on executor loss — the standard localCheckpoint
+trade, chosen because the frame is read at least three times per query.
 """
 
 from __future__ import annotations
@@ -179,6 +186,166 @@ def shingle_rows(
     )
 
 
+def materialized_shingles(
+    df: DataFrame,
+    *,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    df_cap: int | None = None,
+) -> DataFrame:
+    """The one shingle frame of a query: distinct (id_col, s) rows of
+    :func:`shingle_rows`, materialized once for all its consumers.
+
+    With ``df_cap`` the rows also carry ``df`` (the shingle's document
+    frequency, one count window over the shingle-keyed exchange) and only
+    shingles with ``df <= df_cap`` survive — the 100 TB-honest cap: a
+    boilerplate shingle shared by a million docs would otherwise emit
+    5·10¹¹ candidate rows, while a capped shingle contributes at most
+    cap²/2 pairs. Downstream, the pair cores read the ``df`` column to keep
+    ``df >= 2`` rows on their join sides (see :func:`shingle_pair_counts`).
+
+    This is the only place the package checkpoints a shingle frame, and
+    the checkpoint is EAGER: the shingle job runs here, once, before any
+    consumer stage is planned. Every consumer (sizes, both join sides, the
+    MinHash stats) reads the materialized blocks instead of re-running the
+    scan + shingling per lineage branch (ABAB ~10% at sf0.1). A lazy
+    checkpoint cuts the frame's lineage when the FIRST job that reads it
+    ends, while AQE still runs the other consumers as concurrent stages;
+    those stages then report metrics for accumulators the ContextCleaner
+    has dropped (DAGScheduler "non-existent accumulator" ERROR traces,
+    PERF.md §75-§77). Storage is the block manager's memory-and-disk tier
+    — a deliberate spill-for-recompute trade at scale.
+    """
+    sh = shingle_rows(df, text_col=text_col, id_col=id_col, n=n)
+    if df_cap is not None:
+        sh = sh.withColumn(
+            "df", F.count(F.lit(1)).over(Window.partitionBy("s"))
+        ).where(F.col("df") <= df_cap)
+    return sh.localCheckpoint(eager=True)
+
+
+def _side(frame: DataFrame, id_col: str, side: str, *cols) -> DataFrame:
+    """``frame`` with its id renamed to ``doc_a``/``doc_b`` (side "a"/"b")."""
+    return frame.select(F.col(id_col).alias(f"doc_{side}"), *cols)
+
+
+def _pairable(sh: DataFrame) -> DataFrame:
+    """Shingle rows that can join another document's: a ``df == 1``
+    shingle occurs in one document only, so it can never produce a pair.
+    Only a frame that carries ``df`` (a capped :func:`materialized_shingles`)
+    knows that for free; 0.08% of the join rows at sf0.1, 36% at sf0.01,
+    60-90% on real unique-shingle-heavy crawls."""
+    return sh.where(F.col("df") >= 2) if "df" in sh.columns else sh
+
+
+def shingle_pair_counts(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Every document pair that shares at least one shingle, with the
+    exact counts any set-similarity needs: (doc_a, doc_b, shared, na, nb),
+    doc_a < doc_b, ``shared`` = |A ∩ B|, ``na``/``nb`` = |A|, |B|.
+
+    ``sh`` is a :func:`materialized_shingles` frame. Candidate generation
+    is one shingle-keyed self-join, so only documents sharing a shingle
+    ever meet — never |N|²; a hot shingle is a skew key AQE splits (and
+    ``df_cap`` bounds). The sizes read every row of ``sh``; the join sides
+    read only the ``df >= 2`` rows when ``sh`` carries ``df``.
+
+    The self-join is a shuffled-hash join: both sides grow with the
+    corpus, so broadcast is never right, and the checkpointed frame's
+    static size estimate runs ~50x under its true size — a statically
+    chosen broadcast AQE cannot demote (the x10 parity run OOM'd a
+    default-1g driver that way, r8). Between the shuffle joins, SHJ skips
+    the two corpus-scale sorts of sort-merge; its build side holds one
+    partition's shingle slice (ABAB in PERF.md §77). The size joins carry
+    no hint: one row per document grows with the corpus, so AQE picks
+    broadcast only when it actually fits.
+    """
+    pairable = _pairable(sh)
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    shared = (
+        _side(pairable, id_col, "a", "s")
+        .join(_side(pairable, id_col, "b", "s").hint("shuffle_hash"), "s")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    return (
+        shared.join(_side(sizes, id_col, "a", F.col("n").alias("na")), "doc_a")
+        .join(_side(sizes, id_col, "b", F.col("n").alias("nb")), "doc_b")
+        .select("doc_a", "doc_b", "shared", "na", "nb")
+    )
+
+
+#: MinHash tables for the banded candidate join. With 1-row bands the miss
+#: probability for a true pair of Jaccard s is (1-s)^N_TABLES — 0.39% at the
+#: 0.5 threshold boundary, vanishing for real near-dups (0.8 → 2.6e-6);
+#: recall is CERTIFIED by the oracle rows_match, not assumed.
+MINHASH_TABLES = 8
+
+
+def minhash_verified_pairs(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """MinHash-LSH candidate pairs with EXACT shared-shingle counts:
+    (doc_a, doc_b, shared, na, nb) — the :func:`shingle_pair_counts`
+    columns, for the pairs banding finds that can reach Jaccard 0.5.
+
+    1. ONE groupBy over ``sh`` computes each document's shingle count and
+       its MINHASH_TABLES minima of ``xxhash64(s, i)`` (map-side partial
+       min); the count rides along the band rows, so no sizes join.
+    2. Band rows (doc, band, val) self-join on (band, val): only
+       same-bucket documents ever meet, never |N|².
+    3. Size-ratio prune: J ≥ 0.5 with shared ≤ min(na, nb) forces
+       2·min(na, nb) ≥ max(na, nb), so dropping the rest is exact for
+       any threshold ≥ 0.5 (ABAB 2.66 → 1.69 s with the SHJ verify at
+       sf0.1, PERF.md §52).
+    4. Exact verify: the pruned candidates join doc_a's shingles, then
+       (doc_b, s) against doc_b's shingles, counted per pair. Both verify
+       joins read only ``df >= 2`` rows when ``sh`` carries ``df``; the
+       signatures and counts read every row.
+
+    All three joins are shuffled-hash: every side grows with the corpus
+    (see :func:`shingle_pair_counts` for why broadcast is never safe). The
+    band join builds on one side's band slice; the first verify builds on
+    the pruned candidates (4.5x fewer rows than the shingle slice at sf0.1,
+    −0.27 s ABAB) and streams the shingle rows; the second builds on the
+    shingle slice and streams the ~4-5M-row expansion unsorted, which
+    sort-merge would have to sort (PERF.md §52/§56).
+    """
+    stats = sh.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n"),
+        *[
+            F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"m{i}")
+            for i in range(MINHASH_TABLES)
+        ],
+    )
+    sig = F.array(*[F.col(f"m{i}") for i in range(MINHASH_TABLES)])
+    bands = stats.select(id_col, "n", F.posexplode(sig).alias("band", "val"))
+    cand = (
+        _side(bands, id_col, "a", F.col("n").alias("na"), "band", "val")
+        .hint("shuffle_hash")
+        .join(
+            _side(bands, id_col, "b", F.col("n").alias("nb"), "band", "val"),
+            ["band", "val"],
+        )
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "na", "doc_b", "nb")
+        .distinct()
+        .where(F.least("na", "nb") * 2 >= F.greatest("na", "nb"))
+    )
+    pairable = _pairable(sh)
+    return (
+        cand.hint("shuffle_hash")
+        .join(_side(pairable, id_col, "a", "s"), "doc_a")
+        .join(_side(pairable, id_col, "b", "s").hint("shuffle_hash"), ["doc_b", "s"])
+        .groupBy("doc_a", "doc_b", "na", "nb")
+        .agg(F.count(F.lit(1)).alias("shared"))
+        .select("doc_a", "doc_b", "shared", "na", "nb")
+    )
+
+
+def _jaccard() -> F.Column:
+    return F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     *,
@@ -187,59 +354,13 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via a shared-shingle equi-join.
-
-    explode(shingles) → self-join on the shingle → per-pair intersection
-    count → Jaccard. The join is keyed on shingle values, so only documents
-    that share at least one shingle ever meet — the 100 TB-safe candidate
-    generation (a hot shingle is a skew key; AQE skew-join splits it).
+    """Exact n-gram Jaccard near-dup pairs over :func:`shingle_pair_counts`.
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard rounded 6.
     """
-    # shingle_rows: the zip-slice exploded-row shingling (equivalence
-    # fuzz-pinned against token_shingles) — the HOF array form measured ~5x
-    # slower at sf0.1 and this operator only needs the exploded rows.
-    # Three consumers (sizes + both self-join sides) share ONE
-    # localCheckpoint materialization of the shingle rows instead of
-    # re-running the scan+window shingling per lineage branch (ABAB
-    # ~10% on the minhash twin at sf0.1; memory-and-disk storage, a
-    # deliberate spill-for-recompute trade on a 3x-reused frame).
-    # Eager, not lazy: AQE runs the sizes broadcast and the self-join
-    # shuffle as concurrent stages over this frame, and a lazy checkpoint
-    # cuts its lineage when the FIRST job ends; the still-running stage
-    # then reports metrics for accumulators the ContextCleaner has dropped
-    # (DAGScheduler "non-existent accumulator" ERROR traces, PERF.md §75).
-    # curation_pipeline ABAB at par.
-    sh = (
-        shingle_rows(df, text_col=text_col, id_col=id_col, n=n)
-        .select(F.col(id_col).alias("doc"), "s")
-        .localCheckpoint(eager=True)
-    )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    # merge hint: BOTH sides of the shingle self-join grow with the corpus,
-    # so broadcast is never the right physical choice at scale — and the
-    # planner cannot be trusted to see that: the shingle frame's static
-    # estimate runs ~50x under its true size (posexplode expansion is not
-    # modeled; 2.1 MiB claimed for 2.6M rows at the x10 tier), and AQE can
-    # only UPGRADE sort-merge to broadcast, never demote a statically
-    # chosen broadcast — the x10 parity run on a default-1g driver died in
-    # notEnoughMemoryToBuildAndBroadcast before this hint (round 8).
-    shared = (
-        a.hint("merge")
-        .join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("shared") / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("shared"))
-    # No broadcast hint on the sizes table: one row PER DOCUMENT grows with
-    # the corpus, so a forced broadcast is a scale-killer at large doc
-    # counts — AQE picks broadcast when it actually fits and a shuffle join
-    # otherwise (same reasoning as ngram_containment_pairs below).
+    sh = materialized_shingles(df, text_col=text_col, id_col=id_col, n=n)
+    jac = _jaccard()
     return (
-        shared.join(sa, F.col("doc_a") == F.col("sa.doc"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc"))
+        shingle_pair_counts(sh, id_col)
         .where(jac >= threshold)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
@@ -363,52 +484,22 @@ def ngram_containment_pairs(
     fully embedded in a 10,000-shingle doc has Jaccard ≈ 0.01 but
     containment 1.0 — the CCNet/RefinedWeb-style dedup criterion).
 
-    Same 100 TB-safe candidate generation as ngram_jaccard_pairs: the
-    shared-shingle equi-join means only docs sharing a shingle ever meet;
-    a hot shingle is a skew key AQE splits. Returns
-    (doc_small, doc_big, containment, jaccard) — containment for the
-    decision, Jaccard alongside to show what it would have missed.
+    A select over :func:`shingle_pair_counts`, like ngram_jaccard_pairs.
+    Returns (doc_small, doc_big, containment, jaccard) — containment for
+    the decision, Jaccard alongside to show what it would have missed.
+    Equal sizes tiebreak to doc_a as the small side.
     """
-    # Three consumers (sizes + both self-join sides) share ONE lazy
-    # localCheckpoint materialization of the shingle rows instead of
-    # re-running the scan+window shingling per lineage branch (ABAB
-    # ~10% on the minhash twin at sf0.1; memory-and-disk storage, a
-    # deliberate spill-for-recompute trade on a 3x-reused frame).
-    sh = (
-        shingle_rows(df, text_col=text_col, id_col=id_col, n=n)
-        .select(F.col(id_col).alias("doc"), "s")
-        .localCheckpoint(eager=False)
-    )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    # merge hint: big-big self-join by construction; see ngram_jaccard_pairs
-    # above for the static-underestimate/broadcast-demotion rationale (r8).
-    shared = (
-        a.hint("merge")
-        .join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    na, nb = F.col("sa.n_sh"), F.col("sb.n_sh")
-    small_n = F.least(na, nb)
-    containment = F.col("shared") / small_n
-    jac = F.col("shared") / (na + nb - F.col("shared"))
-    # Smaller set is the contained side; equal sizes tiebreak to doc_a.
-    # No broadcast hint on the sizes table: it is one row PER DOCUMENT, so
-    # it grows with the corpus and cannot be a broadcast side at large doc
-    # counts — AQE picks broadcast when it actually fits and a shuffle join
-    # otherwise (the scale-correct default).
-    small_is_a = na <= nb
+    sh = materialized_shingles(df, text_col=text_col, id_col=id_col, n=n)
+    containment = F.col("shared") / F.least("na", "nb")
+    small_is_a = F.col("na") <= F.col("nb")
     return (
-        shared.join(sa, F.col("doc_a") == F.col("sa.doc"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc"))
+        shingle_pair_counts(sh, id_col)
         .where(containment >= threshold)
         .select(
             F.when(small_is_a, F.col("doc_a")).otherwise(F.col("doc_b")).alias("doc_small"),
             F.when(small_is_a, F.col("doc_b")).otherwise(F.col("doc_a")).alias("doc_big"),
             F.round(containment, 6).alias("containment"),
-            F.round(jac, 6).alias("jaccard"),
+            F.round(_jaccard(), 6).alias("jaccard"),
         )
     )
 
@@ -422,24 +513,20 @@ def shingle_pair_ppm(
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Shared-shingle candidate pairs with EXACT integer-ppm Jaccard and
-    the threshold-0.5 edge flag — the shared building block of the
+    the threshold-0.5 edge flag — the building block of the
     dedup-governance family (source_overlap_matrix E272,
     neardup_cluster_quality E273, dedup_governance_rollup E275).
 
     Returns (doc_a, doc_b, jac_ppm, is_edge) with doc_a < doc_b;
     jac_ppm = |∩|·10⁶ div |∪| (multiply-then-div, no float anywhere),
     is_edge ⟺ jaccard ≥ 0.5 via the integer cross-multiplied predicate.
-    Shape: one shingle-keyed SHJ (only docs sharing a shingle ever meet;
-    a hot shingle is a skew key — AQE skew-join splits it, and
-    ngram_jaccard_dfcap is the df-capped variant when boilerplate makes
-    even that too hot), two size joins, one lazy localCheckpoint so the
-    shingle frame materializes once across its three consumers.
+    A select over :func:`shingle_pair_counts`.
 
     ``shingles`` (r12, guide §1.2): a caller that has ALREADY shingled the
-    same frame (e.g. minhash_banding_recall_curve, which builds signatures
-    from the identical (id, s) rows) passes its checkpointed frame here so
-    the scan+shingle pass runs once, not twice. Must be (id_col, "s") rows
-    with distinct-per-doc shingles — i.e. a :func:`shingle_rows` output.
+    frame (minhash_banding_recall_curve builds signatures from the same
+    rows; ngram_jaccard_dfcap passes a df-capped frame) passes its
+    :func:`materialized_shingles` output here so the scan+shingle pass
+    runs once; the ``df`` argument is then unused.
     """
     if shingles is not None:
         # ADVICE r12: the escape hatch relies on a caller contract
@@ -452,32 +539,12 @@ def shingle_pair_ppm(
         )
         sh = shingles
     else:
-        sh = shingle_rows(df, text_col=text_col, id_col=id_col, n=n).localCheckpoint(
-            eager=False
-        )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "s")
-    b = sh.select(F.col(id_col).alias("doc_b"), "s")
-    shared = (
-        a.join(b.hint("shuffle_hash"), "s")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    return (
-        shared.join(
-            sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr("shared * 1000000 div (na + nb - shared)").alias("jac_ppm"),
-            (F.col("shared") * 2 >= F.col("na") + F.col("nb") - F.col("shared"))
-            .alias("is_edge"),
-        )
+        sh = materialized_shingles(df, text_col=text_col, id_col=id_col, n=n)
+    return shingle_pair_counts(sh, id_col).select(
+        "doc_a",
+        "doc_b",
+        F.expr("shared * 1000000 div (na + nb - shared)").alias("jac_ppm"),
+        (F.col("shared") * 2 >= F.col("na") + F.col("nb") - F.col("shared")).alias(
+            "is_edge"
+        ),
     )

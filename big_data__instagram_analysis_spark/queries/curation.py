@@ -71,16 +71,13 @@ def boilerplate_ngram_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram rather than C4's line — the plan is identical (line-hash ↔
     n-gram string).
     """
-    from ..operators.dedup import shingle_rows
+    from ..operators.dedup import materialized_shingles
 
     d = load(spark, sf_dir, "documents")
-    # Codegen shingling (operators/dedup.shingle_rows) — the per-doc
-    # distinct-gram ARRAY was consumed twice (explode + size), paying the
-    # interpreted HOF chain per pass (~12 s at sf0.1); the row form feeds
-    # the DF table, the join-back, and the per-doc sizes from ONE lineage,
-    # lazily localCheckpoint'ed so the three consumers share one
-    # materialization (the minhash/jaccard idiom, PERF-measured ~10-30%).
-    sh = shingle_rows(d, n=3).localCheckpoint(eager=False)
+    # Codegen shingle rows, materialized once for the DF table, the
+    # join-back and the per-doc sizes — the per-doc distinct-gram ARRAY
+    # paid the interpreted HOF chain per pass (~12 s at sf0.1).
+    sh = materialized_shingles(d)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     freq = (
         sh.groupBy("s")
@@ -89,10 +86,8 @@ def boilerplate_ngram_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s")
     )
     hits = (
-        # merge hint: freq (corpus-frequent shingles) grows with the corpus,
-        # and the checkpointed shingle scan's static size estimate runs far
-        # under true size — a statically chosen broadcast of either side
-        # cannot be demoted by AQE (operators/dedup.py rationale, r8).
+        # merge hint: freq grows with the corpus, so neither side may be a
+        # static broadcast (operators/dedup.shingle_pair_counts rationale).
         sh.hint("merge")
         .join(freq, "s")
         .groupBy("doc_id")

@@ -12,8 +12,13 @@ from ..io import load, local_frame
 from ..operators.dedup import (
     SIMHASH_BITS,
     exact_dedup,
+    materialized_shingles,
+    minhash_verified_pairs,
+    ngram_containment_pairs,
     ngram_jaccard_pairs,
     normalize_text,
+    shingle_pair_counts,
+    shingle_pair_ppm,
     simhash,
     simhash_neardup_pairs,
 )
@@ -245,13 +250,6 @@ def simhash_neardup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_neardup_pairs(sh, max_hamming=3)
 
 
-#: MinHash tables for the banded candidate join. With 1-row bands the miss
-#: probability for a true pair of Jaccard s is (1-s)^N_TABLES — 0.39% at the
-#: 0.5 threshold boundary, vanishing for real near-dups (0.8 → 2.6e-6);
-#: recall is CERTIFIED by the oracle rows_match, not assumed.
-MINHASH_TABLES = 8
-
-
 @query(
     "minhash_lsh_neardup",
     tags=("llm_bench",),
@@ -287,28 +285,11 @@ def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     against exact Jaccard.
 
     The scale path for Jaccard dedup — banding makes candidate generation
-    sub-quadratic (only bucket-collision pairs meet):
-
-      1. shingle WITHOUT the in-row HOF chain (transform/concat_ws over
-         arrays is interpreted, measured ~5 s/pass at sf0.1): posexplode
-         tokens → window ``lead(t,1)/lead(t,2)`` per doc → concat — one
-         doc-keyed shuffle, whole-stage codegen, and the (doc, shingle)
-         ROWS feed every later stage (no array column anywhere);
-      2. per (doc, shingle) compute ``xxhash64(shingle, i)`` for
-         i < MINHASH_TABLES; ONE groupBy(doc_id) takes the 8 per-table
-         minima → an 8-long signature row per doc (map-side partial min);
-      3. unpivot signatures to (doc, band, val) and equi-join on
-         (band, val) — the shuffle key is the band bucket, so only
-         same-bucket docs ever meet (never |N|²), skew splittable by AQE;
-      4. prune candidates that CANNOT clear the threshold (size-ratio
-         bound 2·min(na,nb) ≥ max(na,nb) — exact, not heuristic), then
-         verify the rest EXACTLY via shared-shingle counts: candidate
-         pairs join the (doc, shingle) rows on doc_a (shuffled-hash,
-         building on the pruned CAND side) then equi-join on
-         (doc_b, shingle) (shuffled-hash building on the shingle slice —
-         the expansion is the big side and SMJ would sort it), count per
-         pair, Jaccard = shared/(na+nb-shared) from exact integer
-         counts, filtered ≥ 0.5.
+    sub-quadratic (only bucket-collision pairs meet). The pipeline —
+    MINHASH_TABLES xxhash64 minima per document, the (band, val)
+    self-join, the exact size-ratio prune and the exact shared-shingle
+    verify — is operators/dedup.minhash_verified_pairs; this query keeps
+    the pairs with exact Jaccard ≥ 0.5.
 
     Rounds 1-3 used pyspark.ml's MinHashLSH.approxSimilarityJoin — same
     banding structure but measured 10 s of the query's 11.4 s at sf0.1
@@ -326,125 +307,20 @@ def minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the exact ≥0.5 pair set in SQL — a hash match
     certifies BOTH precision (the exact filter guarantees emitted pairs
     are truly ≥ threshold) and recall (a candidate-generation miss would
-    drop a row and fail rows_match; see MINHASH_TABLES).
+    drop a row and fail rows_match; see operators/dedup.MINHASH_TABLES).
 
     Sampling/recall statistics are additionally property-tested in
     tests/test_properties.py against ngram_jaccard_pairs ground truth.
     """
-    from ..operators.dedup import shingle_rows
-
     d = load(spark, sf_dir, "documents")
-    # Three consumers read the (doc, shingle) rows (the fused stats agg and
-    # both sides of the exact-verify join); lazily localCheckpoint the
-    # frame so they share ONE materialization instead of re-running the
-    # scan+window shingling per lineage branch (the winnow/CC idiom;
-    # ABAB-measured ~10% at sf0.1: 3.03→2.74 s). Storage is the block
-    # manager's memory-and-disk tier, so at 100 TB this is a deliberate
-    # disk-spill-for-recompute trade on a frame reused four times.
-    sh_ex = shingle_rows(d, n=3).localCheckpoint(eager=False)
-    # ONE groupBy(doc_id) computes the 8 per-table minima AND the shingle
-    # count, and n_sh rides along the band rows into the candidate pairs —
-    # round 8 removed the separate sizes aggregation (a fourth full pass
-    # over the shingle frame) and the two sizes equi-joins that used to
-    # finish the query: the exact-Jaccard denominator now falls out of the
-    # candidate row itself (8 extra bytes per band row, nothing at scale).
-    stats = sh_ex.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        *[
-            F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"m{i}")
-            for i in range(MINHASH_TABLES)
-        ],
-    )
-    bands = stats.select(
-        "doc_id",
-        "n_sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"), F.col(f"m{i}").alias("val")
-                    )
-                    for i in range(MINHASH_TABLES)
-                ]
-            )
-        ).alias("bv"),
-    ).select(
-        "doc_id", "n_sh", F.col("bv.band").alias("band"), F.col("bv.val").alias("val")
-    )
-
-    a, b = bands.alias("a"), bands.alias("b")
-    # shuffle_hash (round 10, was merge): both band sides grow with the
-    # corpus (8 rows/doc), so broadcast is never right at scale — the
-    # checkpointed frames' static estimates run ~50x under true size,
-    # which statically picked a broadcast AQE cannot demote (the x10
-    # parity run on a default-1g driver OOM'd in the sa⋈sh_ex build;
-    # round 8). Between the shuffle strategies, SHJ skips the sort and
-    # its build side holds only the PER-PARTITION band slice (|bands|/P
-    # rows — the same boundedness as any hash agg; AQE skew-split
-    # applies), ABAB-measured −0.2 s at sf0.1 and green at the ×10 tier.
-    cand = (
-        a.hint("shuffle_hash")
-        .join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .distinct()
-        # Size-ratio prefilter (round 9): J = shared/(na+nb−shared) ≥ 0.5
-        # with shared ≤ min(na,nb) forces 2·min(na,nb) ≥ max(na,nb), so a
-        # candidate violating it CANNOT clear the threshold — a rigorous
-        # prune, not a heuristic (ties kept; the oracle pair set is
-        # untouched). It's free — na/nb already ride on the candidate row —
-        # and cuts the verify expansion ~29% at sf0.1 (hub-bucket pairs
-        # join dissimilar-length docs). ABAB-measured with the SHJ switch
-        # below: 2.66 → 1.69 s at sf0.1 (PERF.md §52).
-        .where(F.least("na", "nb") * 2 >= F.greatest("na", "nb"))
-    )
-
-    # (r8 counter-measurement: semi-joining sh_ex down to candidate docs
-    # before the verify joins read 3.0-4.0 s vs 2.8 s here — the semi either
-    # re-ran per branch or forced an extra materialization barrier; the
-    # direct form below stays.)
-    #
-    # shuffle_hash (round 9, was merge): the verify expansion (cand ×
-    # doc_a's shingles, ~4-5M skinny rows at sf0.1) is the query's largest
-    # intermediate, and SMJ had to SORT it on (doc_b, s) — the dominant
-    # cost in the ABAB profile. A shuffled-hash join builds on the
-    # shingle-frame side (the hint target), whose per-partition slice is
-    # bounded by shuffle partitioning exactly like any hash-agg table —
-    # NOT a broadcast (the r8 OOM was a statically-sized broadcast of the
-    # whole frame; SHJ holds |sh_ex|/P rows per task, AQE skew-split
-    # applies) — and streams the big expansion side unsorted.
-    # Build on CAND (round 10, was the shingle side): the hash map then
-    # holds the pruned candidate pairs (4.5x fewer rows than the shingle
-    # slice at sf0.1; still per-partition-bounded at scale) while the
-    # shingle rows stream through as probes — ABAB-measured −0.27 s.
-    sa = cand.hint("shuffle_hash").join(
-        sh_ex.select(F.col("doc_id").alias("doc_a"), "s"),
-        "doc_a",
-    )
-    shared = (
-        sa.join(
-            sh_ex.select(F.col("doc_id").alias("doc_b"), "s").hint("shuffle_hash"),
-            ["doc_b", "s"],
-        )
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    exact_jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
+    jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
     return (
-        shared.where(exact_jac >= 0.5)
+        minhash_verified_pairs(materialized_shingles(d))
+        .where(jac >= 0.5)
         .select(
             "doc_a",
             "doc_b",
-            F.round(exact_jac, 6).alias("jaccard"),
+            F.round(jac, 6).alias("jaccard"),
             F.lit(True).alias("lsh_found"),
         )
         .orderBy("doc_a", "doc_b")
@@ -648,8 +524,6 @@ def containment_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-quadratic, skew-splittable.
     """
     d = load(spark, sf_dir, "documents")
-    from ..operators.dedup import ngram_containment_pairs
-
     return ngram_containment_pairs(d, n=3, threshold=0.8).orderBy(
         "doc_small", "doc_big"
     )
@@ -707,31 +581,9 @@ def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     to end (shared*1000 DIV union): no float bucket-boundary flakiness by
     construction.
     """
-    from ..operators.dedup import shingle_rows
-
     d = load(spark, sf_dir, "documents")
-    sh = (
-        shingle_rows(d, n=3)
-        .select(F.col("doc_id").alias("doc"), "s")
-        # 3 consumers share one materialization (see minhash note above)
-        .localCheckpoint(eager=False)
-    )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    # merge hint: big-big shingle self-join (operators/dedup.py rationale, r8)
-    shared = (
-        a.hint("merge")
-        .join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    pm = (
-        shared.join(sa, F.col("doc_a") == F.col("sa.doc"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc"))
-        .select(
-            F.expr("shared * 1000 DIV (sa.n_sh + sb.n_sh - shared)").alias("jac_pm")
-        )
+    pm = shingle_pair_counts(materialized_shingles(d)).select(
+        F.expr("shared * 1000 DIV (na + nb - shared)").alias("jac_pm")
     )
     return (
         pm.groupBy(F.expr("least(9, jac_pm DIV 100)").cast("long").alias("decile"))
@@ -911,8 +763,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set (sub-quadratic by the shared-shingle equi-join), and
     the matrix itself is ≤ |sources|² rows.
     """
-    from ..operators.dedup import shingle_pair_ppm
-
     d = load(spark, sf_dir, "documents")
     pairs = shingle_pair_ppm(d, n=3).where("is_edge").select(
         "doc_a", "doc_b", "jac_ppm"
@@ -1024,7 +874,6 @@ def neardup_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiply-then-div, mean as sum div count) — no float agg anywhere.
     The output is ≤ 2 rows.
     """
-    from ..operators.dedup import shingle_pair_ppm
     from ..operators.graph import attach_components
 
     d = load(spark, sf_dir, "documents")
@@ -1124,64 +973,21 @@ def ngram_jaccard_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Semantics are exact Jaccard IN THE CAPPED SHINGLE SPACE: df is
     computed first (one count window over the shingle-keyed exchange —
-    no extra join), sizes and intersections both use only surviving
-    shingles, so the emitted ppm is a well-defined similarity, not a
-    truncated estimate of the uncapped one. At bench tiers the cap binds
+    no extra join, operators/dedup.materialized_shingles), sizes and
+    intersections both use only surviving shingles, so the emitted ppm is
+    a well-defined similarity, not a truncated estimate of the uncapped
+    one. The join sides also drop df == 1 shingles, which can never pair
+    (operators/dedup.shingle_pair_counts). At bench tiers the cap binds
     only at sf0.1+ (max df 25 measured; 9 at sf0.001), so small-tier
     results stay comparable to ngram_jaccard_neardup while the ×10 tier
     exercises the pruned path.
     """
-    from pyspark.sql.window import Window as _W
-
-    from ..operators.dedup import shingle_rows
-
     d = load(spark, sf_dir, "documents")
-    sh = shingle_rows(d, n=3)
-    # r13 (guide §2.3/§3.2): carry df through the checkpoint so the
-    # self-join sides can ALSO drop df==1 shingles — a shingle occurring in
-    # exactly one document can never produce a pair (it joins only itself
-    # and fails doc_a < doc_b), so excluding it before the exchange is
-    # free row reduction on both shuffled join inputs. The window computes
-    # df anyway for the cap, so this costs nothing; `sizes` keeps ALL
-    # capped shingles (df==1 included) — the Jaccard denominator is
-    # unchanged. Measured fractions of shingle rows removed from the join
-    # shuffle: 0.08% at sf0.1 (wall-neutral, this corpus's shingles are
-    # dense), 36% at sf0.01; real crawl corpora run 60-90% unique
-    # shingles, which is where the shuffle savings land at 100 TB.
-    # Eager: AQE runs this frame's consumers as concurrent stages, and a
-    # lazy checkpoint would cut their lineage under them (DAGScheduler
-    # "non-existent accumulator" traces, PERF.md §75-76).
-    keep = (
-        sh.withColumn("df", F.count(F.lit(1)).over(_W.partitionBy("s")))
-        .where(F.col("df") <= NGRAM_DF_CAP)
-        .select("doc_id", "s", "df")
-        .localCheckpoint(eager=True)
-    )
-    sizes = keep.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    pairable = keep.where(F.col("df") >= 2)
-    a = pairable.select(F.col("doc_id").alias("doc_a"), "s")
-    b = pairable.select(F.col("doc_id").alias("doc_b"), "s")
-    shared = (
-        a.join(b.hint("shuffle_hash"), "s")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    capped = materialized_shingles(d, df_cap=NGRAM_DF_CAP)
     return (
-        shared.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")),
-            "doc_b",
-        )
-        .where(F.col("shared") * 2 >= F.col("na") + F.col("nb") - F.col("shared"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr("shared * 1000000 div (na + nb - shared)").alias("jac_ppm"),
-        )
+        shingle_pair_ppm(d, shingles=capped)
+        .where("is_edge")
+        .select("doc_a", "doc_b", "jac_ppm")
         .orderBy("doc_a", "doc_b")
     )
 
@@ -1280,8 +1086,6 @@ def dedup_governance_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.py — shared with E272/E273) + two dim joins + an explode-free
     two-arm union keyed by source. Everything emitted is integer-exact.
     """
-    from ..operators.dedup import normalize_text, shingle_pair_ppm
-
     d = load(spark, sf_dir, "documents")
     n_tok = F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit("")))
     t = d.select(
@@ -1483,12 +1287,8 @@ def minhash_banding_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan shape is the same band-bucket equi-join as the scale path (never
     |N|^2), so the sample size only scales the constant.
     """
-    from ..operators.dedup import shingle_pair_ppm, shingle_rows
-
     d = load(spark, sf_dir, "documents")
-    sh = shingle_rows(d, text_col="text", id_col="doc_id").localCheckpoint(
-        eager=False
-    )
+    sh = materialized_shingles(d)
 
     def H(i: int):
         return F.conv(
@@ -1546,10 +1346,9 @@ def minhash_banding_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     truth = (
-        # r12: pass the already-checkpointed shingle frame — the ground
-        # truth uses the IDENTICAL (doc_id, s) rows the signatures were
-        # built from, so the scan+shingle pass runs once, not twice.
-        shingle_pair_ppm(d, text_col="text", id_col="doc_id", shingles=sh)
+        # The ground truth reads the same materialized rows the signatures
+        # were built from, so the scan+shingle pass runs once, not twice.
+        shingle_pair_ppm(d, shingles=sh)
         .where(F.col("is_edge"))
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=False)  # read by the scalar agg + the hit join
@@ -1663,83 +1462,11 @@ def minhash_lsh_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the variant you run — real crawls are boilerplate-heavy — with the cap
     set from a df histogram (E274 note), not a constant.
     """
-    from pyspark.sql.window import Window as _W
-
-    from ..operators.dedup import shingle_rows
-
     d = load(spark, sf_dir, "documents")
-    keep = (
-        shingle_rows(d, n=3)
-        .withColumn("df", F.count(F.lit(1)).over(_W.partitionBy("s")))
-        .where(F.col("df") <= NGRAM_DF_CAP)
-        .select("doc_id", "s", "df")
-        .localCheckpoint(eager=False)  # stats agg + both verify joins
-    )
-    stats = keep.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        *[
-            F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"m{i}")
-            for i in range(MINHASH_TABLES)
-        ],
-    )
-    bands = stats.select(
-        "doc_id",
-        "n_sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"), F.col(f"m{i}").alias("val")
-                    )
-                    for i in range(MINHASH_TABLES)
-                ]
-            )
-        ).alias("bv"),
-    ).select(
-        "doc_id", "n_sh", F.col("bv.band").alias("band"), F.col("bv.val").alias("val")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.hint("shuffle_hash")
-        .join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .distinct()
-        .where(F.least("na", "nb") * 2 >= F.greatest("na", "nb"))
-    )
-    # r13 (guide §2.3/§3.2): the verify joins intersect the two docs'
-    # shingle sets, and a df==1 shingle exists in ONE document only — it
-    # can never survive the (doc_b, s) join — so both verify sides drop it
-    # BEFORE their exchanges (free: the cap window computed df anyway).
-    # Signatures and n_sh above still use ALL capped shingles (df==1
-    # included): minima and Jaccard denominators are unchanged. Join-side
-    # row reduction: 0.08% at sf0.1 / 36% at sf0.01 / 60-90% on real
-    # unique-shingle-heavy crawls (the 100 TB case this variant exists for).
-    pairable = keep.where(F.col("df") >= 2)
-    sa = cand.hint("shuffle_hash").join(
-        pairable.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a"
-    )
-    shared = (
-        sa.join(
-            pairable.select(F.col("doc_id").alias("doc_b"), "s").hint("shuffle_hash"),
-            ["doc_b", "s"],
-        )
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
+    capped = materialized_shingles(d, df_cap=NGRAM_DF_CAP)
     return (
-        shared.where(
-            F.col("shared") * 2 >= F.col("na") + F.col("nb") - F.col("shared")
-        )
+        minhash_verified_pairs(capped)
+        .where(F.col("shared") * 2 >= F.col("na") + F.col("nb") - F.col("shared"))
         .select(
             "doc_a",
             "doc_b",
@@ -1846,7 +1573,6 @@ def dedup_governance_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed large/small-star components against SQL transitive
     closure, plus every ppm digit.
     """
-    from ..operators.dedup import shingle_pair_ppm
     from ..operators.graph import attach_components
 
     d = load(spark, sf_dir, "documents")
@@ -1862,8 +1588,6 @@ def dedup_governance_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form below (exactly the oracle's `surv` CTE shape) selects survivors
     # in place: ONE content-hash exchange total, no join. Survivor = min
     # doc_id per hash, identical to exact_dedup's row_number()=1 pick.
-    from ..operators.dedup import normalize_text
-
     hw = Window.partitionBy("h")
     s = (
         base.withColumn(

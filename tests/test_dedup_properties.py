@@ -131,36 +131,69 @@ _JWORDS = ["join", "scan", "merge", "hash", "row", "batch", "sort", "key"]
     )
 )
 def test_ngram_jaccard_pairs_vs_bruteforce(spark, texts):
-    """The shared-shingle equi-join must return exactly the pairs (and
-    exactly the Jaccard values) a brute-force python shingle comparison
-    computes — the operator every near-dup family leans on as ground
-    truth deserves its own independent oracle."""
+    """The shared-shingle pair operators must return exactly the pairs
+    (and exactly the values) a brute-force python shingle comparison
+    computes — the Jaccard pairs every near-dup family leans on as ground
+    truth, the containment pairs and the integer-ppm candidate pairs all
+    read operators/dedup.shingle_pair_counts, and each gets the same
+    independent oracle."""
+    from big_data__instagram_analysis_spark.io import local_frame
     from big_data__instagram_analysis_spark.operators.dedup import (
+        ngram_containment_pairs,
         ngram_jaccard_pairs,
+        shingle_pair_ppm,
     )
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, n=3, threshold=0.3).collect()
-    }
+    # A LocalRelation: each operator's eager shingle job starts no Python
+    # worker tasks for the input frame.
+    df = local_frame(spark, list(enumerate(texts)), "doc_id long, text string")
 
     def shingles(t):
         ws = [w for w in t.split(" ") if w]
         return {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)}
 
     sh = {i: shingles(t) for i, t in enumerate(texts)}
+    # (a, b) -> (|A ∩ B|, |A|, |B|) for every pair sharing a shingle.
+    counts = {
+        (a, b): (len(sh[a] & sh[b]), len(sh[a]), len(sh[b]))
+        for a in sh
+        for b in sh
+        if a < b and sh[a] & sh[b]
+    }
+
+    got = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in ngram_jaccard_pairs(df, n=3, threshold=0.3).collect()
+    }
     expected = {}
-    for a in sh:
-        for b in sh:
-            if a < b and sh[a] and sh[b]:
-                inter = len(sh[a] & sh[b])
-                if inter:
-                    j = inter / (len(sh[a]) + len(sh[b]) - inter)
-                    if j >= 0.3:
-                        expected[(a, b)] = round(j, 6)
+    for pair, (inter, na, nb) in counts.items():
+        j = inter / (na + nb - inter)
+        if j >= 0.3:
+            expected[pair] = round(j, 6)
+    assert got == expected, (got, expected)
+
+    got = {
+        (r.doc_small, r.doc_big): (r.containment, r.jaccard)
+        for r in ngram_containment_pairs(df, n=3, threshold=0.5).collect()
+    }
+    expected = {}
+    for (a, b), (inter, na, nb) in counts.items():
+        if inter / min(na, nb) >= 0.5:
+            key = (a, b) if na <= nb else (b, a)
+            expected[key] = (
+                round(inter / min(na, nb), 6),
+                round(inter / (na + nb - inter), 6),
+            )
+    assert got == expected, (got, expected)
+
+    got = {
+        (r.doc_a, r.doc_b): (r.jac_ppm, r.is_edge)
+        for r in shingle_pair_ppm(df, n=3).collect()
+    }
+    expected = {
+        pair: (inter * 1_000_000 // (na + nb - inter), 2 * inter >= na + nb - inter)
+        for pair, (inter, na, nb) in counts.items()
+    }
     assert got == expected, (got, expected)
 
 

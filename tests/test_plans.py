@@ -577,27 +577,93 @@ def test_corpus_pair_joins_never_broadcast_the_shingle_frame(spark, sf_dir):
     """r8: the checkpointed shingle/fingerprint frames carry static size
     estimates ~50x under true size (posexplode expansion unmodeled), and a
     statically chosen broadcast cannot be demoted by AQE — at the x10 tier
-    this OOM'd a default-size driver. The big-big pair joins are merge-
-    hinted; a refactor that drops the hint re-opens the scale hazard while
-    still passing parity, so pin the physical shape here."""
-    for name, min_smj in [
-        ("ngram_jaccard_neardup", 1),
-        ("containment_neardup_pairs", 1),
-        ("winnow_match_pairs", 1),
-        ("boilerplate_ngram_flags", 1),
-    ]:
+    this OOM'd a default-size driver. These frame joins are merge-hinted;
+    a refactor that drops the hint re-opens the scale hazard while still
+    passing parity, so pin the physical shape here. (The shared-shingle
+    pair family is pinned by test_shingle_pair_core_plan_shape.)"""
+    for name in ("winnow_match_pairs", "boilerplate_ngram_flags"):
         plan = _plan(spark, sf_dir, name)
-        assert plan.count("SortMergeJoin") >= min_smj, (name, plan[:600])
-    # minhash (round 10): ALL THREE joins are SHUFFLED-HASH — the band
-    # self-join and both exact-verify joins. Build sides are per-partition
-    # slices (band slice / pruned candidates / shingle slice), never a
-    # whole-frame broadcast (the r8 OOM lesson): SMJ would sort the
-    # ~4-5M-row verify expansion and the ~0.5M-row band frame, the
-    # query's dominant costs (PERF.md §52/§56). Pin the shapes AND the
-    # no-broadcast property.
-    plan = _plan(spark, sf_dir, "minhash_lsh_neardup")
-    assert plan.count("ShuffledHashJoin") >= 3, plan[:600]
-    assert "BroadcastHashJoin" not in plan, plan[:600]
+        assert "SortMergeJoin" in plan, (name, plan[:600])
+
+
+#: Registered queries built on operators/dedup.shingle_pair_counts.
+SHINGLE_PAIR_CONSUMERS = (
+    "ngram_jaccard_neardup",
+    "containment_neardup_pairs",
+    "neardup_threshold_sweep",
+    "ngram_jaccard_dfcap",
+    "source_overlap_matrix",
+    "neardup_cluster_quality",
+    "dedup_governance_rollup",
+    "dedup_governance_pipeline",
+    "minhash_banding_recall_curve",
+    "neardup_cc_clusters",
+    "dedup_keep_best_survivors",
+    "split_leakage_audit",
+    "curation_pipeline",
+)
+#: Registered queries built on operators/dedup.minhash_verified_pairs.
+MINHASH_VERIFY_CONSUMERS = ("minhash_lsh_neardup", "minhash_lsh_dfcap")
+
+
+def _built_plans(spark, sf_dir, name: str) -> list[str]:
+    """Formatted plans of every SQL execution that building ``name`` ran
+    (eager checkpoints, connected-component rounds, lazy checkpoints'
+    plans) followed by the returned plan. Several consumers read the pair
+    frame only through such an execution, so their returned plan alone
+    never shows the pair join."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        xs = store.executionsList()
+        return [xs.apply(i) for i in range(xs.size())]
+
+    seen = {x.executionId() for x in executions()}
+    df = get_specs()[name].fn(spark, sf_dir)
+    ran = [
+        x.physicalPlanDescription()
+        for x in executions()
+        if x.executionId() not in seen
+    ]
+    return ran + [
+        spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    ]
+
+
+#: A join node of the formatted explain whose keys are the shingle alone.
+_SHINGLE_KEYED = r"\(\d+\) {join}[^\n]*\nLeft keys \[1\]: \[s#"
+
+
+@pytest.mark.parametrize("name", SHINGLE_PAIR_CONSUMERS + MINHASH_VERIFY_CONSUMERS)
+def test_shingle_pair_core_plan_shape(spark, sf_dir, name):
+    """Every consumer of the two pair cores keeps their scale shape.
+
+    - shingle_pair_counts: the shingle self-join is a ShuffledHashJoin
+      (both sides grow with the corpus: broadcast would OOM, sort-merge
+      pays two corpus-scale sorts), never a SortMergeJoin.
+    - minhash_verified_pairs: the band join and both verify joins are
+      ShuffledHashJoins and nothing is broadcast (PERF.md §52/§56).
+    - No cartesian product or nested-loop join anywhere, except the 1-row
+      n_truth scalar of minhash_banding_recall_curve's returned plan
+      (pinned by test_round12_dedup_additions_plan_shape).
+    """
+    plans = _built_plans(spark, sf_dir, name)
+    for plan in plans:
+        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+    nlj_free = plans[:-1] if name == "minhash_banding_recall_curve" else plans
+    for plan in nlj_free:
+        assert "BroadcastNestedLoopJoin" not in plan, f"{name}: NLJ"
+    if name in MINHASH_VERIFY_CONSUMERS:
+        plan = plans[-1]
+        assert len(set(re.findall(r"\((\d+)\) ShuffledHashJoin", plan))) >= 3, plan[:800]
+        assert "BroadcastHashJoin" not in plan, plan[:800]
+        return
+    shj = _SHINGLE_KEYED.format(join="ShuffledHashJoin")
+    assert any(re.search(shj, p) for p in plans), f"{name}: no shingle-keyed SHJ"
+    smj = _SHINGLE_KEYED.format(join="SortMergeJoin")
+    assert not any(re.search(smj, p) for p in plans), f"{name}: shingle-keyed SMJ"
 
 
 # ---------------------------------------------------------------------------
@@ -760,46 +826,16 @@ def test_vocab_joins_respect_broadcast_threshold(spark, sf_dir):
         spark.conf.set(key, prior)
 
 
-def test_governance_pair_family_plan_shape(spark, sf_dir):
-    """The three shingle_pair_ppm consumers (E272/E273/E275) must keep the
-    scale shape of the shared pair block: the shingle self-join is a
-    ShuffledHashJoin (both sides grow with the corpus — broadcast would
-    OOM, sort-merge pays two corpus-scale sorts), and no cartesian
-    product anywhere."""
-    for name in (
-        "source_overlap_matrix",
-        "neardup_cluster_quality",
-        "dedup_governance_rollup",
-    ):
-        plan = _plan(spark, sf_dir, name)
-        # neardup_cluster_quality lazily localCheckpoints the pair frame,
-        # so its downstream plan truncates at the checkpoint scan and the
-        # SHJ lives in the (already-pinned) upstream block — assert it
-        # only where the pair block is visible in the same plan tree.
-        if name != "neardup_cluster_quality":
-            assert "ShuffledHashJoin" in plan, f"{name}: shingle SHJ missing"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-        assert "BroadcastNestedLoopJoin" not in plan, f"{name}: NLJ"
-
-
 def test_round12_dedup_additions_plan_shape(spark, sf_dir):
-    """Round-12 L2 additions keep the family's scale shapes.
+    """Round-12 L2 additions keep the family's scale shapes (their pair
+    blocks are pinned by test_shingle_pair_core_plan_shape).
 
-    - minhash_lsh_dfcap: the banding/verify joins are ShuffledHashJoins
-      (both sides grow with the corpus — the minhash_lsh_neardup contract),
-      no cartesian, no NLJ.
-    - dedup_governance_pipeline: no cartesian/NLJ anywhere in the chain
-      (the pair block's SHJ lives behind its lazy localCheckpoint, as in
-      neardup_cluster_quality — see test_governance_pair_family_plan_shape).
+    - dedup_governance_pipeline: no cartesian/NLJ anywhere in the
+      returned chain.
     - minhash_banding_recall_curve: the ONLY nested-loop join is the 1-row
       n_truth scalar broadcast (the documented crossJoin-scalar idiom);
       the band self-join shuffles, never broadcasts a growing side.
     """
-    plan = _plan(spark, sf_dir, "minhash_lsh_dfcap")
-    assert "ShuffledHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
     plan = _plan(spark, sf_dir, "dedup_governance_pipeline")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
