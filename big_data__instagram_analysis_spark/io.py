@@ -150,6 +150,33 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, struct)
 
 
+def bounded_collect(df: DataFrame, max_rows: int):
+    """``df`` as a pandas frame if it has at most ``max_rows`` rows, else None.
+
+    The size probe and the collect are one ``limit(max_rows + 1)`` action:
+    it either proves the frame exceeds the bound or already IS the whole
+    frame, where a ``count()``-then-``toPandas()`` pair would run a job each
+    for the same answer. It is a JVM → driver collect (Arrow when
+    ``spark.sql.execution.arrow.pyspark.enabled``) and starts no Python
+    worker. Driver memory stays bounded by ``max_rows + 1`` rows either way.
+    The action is one Spark job when the frame has one partition or its
+    first partition alone exceeds the bound; otherwise ``CollectLimit``
+    reads further partitions in scaled-up follow-on jobs until it has
+    enough rows.
+
+    The trade-off, accepted: above the bound this ships ``max_rows + 1``
+    rows to the driver instead of a count's single row, but ``CollectLimit``
+    stops reading partitions once it has them, while a count aggregates
+    every partition; the bounded transfer is noise next to the distributed
+    work the caller then runs. The callers (the local finishes of
+    ``operators/graph.connected_components`` and
+    ``operators/clustering.kmeans_lloyd``) bound ``max_rows`` to a few MB
+    to a few tens of MB.
+    """
+    pdf = df.limit(max_rows + 1).toPandas()
+    return pdf if len(pdf) <= max_rows else None
+
+
 def scratch_dir(sub: str = "") -> str:
     """Writable scratch under the repo (we must not touch paths outside it)."""
     base = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")

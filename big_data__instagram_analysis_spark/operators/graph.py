@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import local_frame
+from ..io import bounded_collect, local_frame
 
 #: Canonical-edge count under which the component closure finishes on the
 #: driver instead of running distributed star rounds. A bounded local finish
@@ -157,21 +157,10 @@ def connected_components(
         [StructField("node", dt, False), StructField("component", dt, False)]
     )
     for _ in range(max_rounds):
-        # Size probe and collect in ONE job (r12, guide §1.2): limit
-        # (threshold+1) either proves the graph exceeds the local bound or
-        # already IS the full edge set — the old count()-then-toPandas pair
-        # was two scheduler jobs for the same answer. Driver memory stays
-        # bounded by local_threshold+1 rows either way.
-        # ADVICE r12 trade-off, accepted and documented: on rounds where
-        # the graph is still ABOVE the bound this ships threshold+1 edge
-        # rows (~3 MB Arrow at the default bound) to the driver instead of
-        # the count()'s single row — but CollectLimit executes
-        # incrementally (scans partitions until threshold+1 rows are
-        # found), while a count-shaped probe aggregates EVERY partition,
-        # so the fused probe reads less and schedules half the jobs; the
-        # bounded transfer is noise next to a star round's shuffles.
-        pdf = e.limit(local_threshold + 1).toPandas()
-        if len(pdf) <= local_threshold:
+        # Size probe and collect in one action (io.bounded_collect); above
+        # the bound it ships threshold+1 edge rows (~3 MB Arrow at the default).
+        pdf = bounded_collect(e, local_threshold)
+        if pdf is not None:
             labels = _local_components(
                 zip(pdf["a"].tolist(), pdf["b"].tolist())
             )

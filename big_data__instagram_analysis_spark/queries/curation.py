@@ -326,14 +326,15 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = exact_dedup(q, text_col="text", id_col="doc_id").select("doc_id")
     # Three consumers (near-dup pair generation, the CC node frame, the
     # canonical-survivor join) otherwise each recompute the scan + quality
-    # gate + dedup window — the same lazy-localCheckpoint sharing the
-    # shingle-consuming dedup family got in r7 (PERF.md §47); only the
-    # columns the branches need are kept so the materialized frame stays
-    # narrow.
+    # gate + dedup window, so the survivors are materialized once; only the
+    # columns the branches need are kept so the frame stays narrow. Eager,
+    # like operators/dedup.materialized_shingles: a lazy checkpoint read by
+    # concurrent AQE stages prints "non-existent accumulator" traces
+    # (PERF.md §75).
     s = (
         q.join(survivors, "doc_id")
         .select("doc_id", "lang", "text", "t")
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     pairs = ngram_jaccard_pairs(s, n=3, threshold=0.5).select("doc_a", "doc_b")
     labeled = attach_components(

@@ -1047,10 +1047,14 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     init) over the embeddings — the iterative-ML loop as DataFrame
     algebra (operators/clustering.py).
 
-    Per round: one Arrow mapInPandas pass assigns every vector and emits
-    per-batch (count, vector sum, squared-distance sum) partials per
-    cluster, then one collect of those few rows; vectors never shuffle and
-    the k×64 centroid matrix rides in the task closure.
+    Per round, one kernel assigns every vector and emits per-batch (count,
+    vector sum, squared-distance sum) partials per cluster, which the
+    driver sums. At fixture scale (≤ 62,500 vectors of 64 dims) the rounds
+    run on the driver over one bounded collect and the assignments are a
+    LocalTableScan, so no Python worker task starts; above that bound each
+    round is one Arrow mapInPandas pass plus a collect of those few rows,
+    vectors never shuffle and the k×64 centroid matrix rides in the task
+    closure.
 
     Hash-checked via the certified-property pattern: float argmin
     near-ties make cluster MEMBERSHIP engine-sensitive (no hash-portable

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -18,6 +19,28 @@ def spark():
 
     s = get_spark("iga-tests")
     yield s
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (number of Spark jobs ``fn()`` ran, its result).
+
+    Counted by job group: the status tracker keeps only the last
+    ``spark.ui.retainedJobs`` (1000) jobs, so probing global job ids upward
+    from 0 finds none late in a full test run."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+    return count
 
 
 @pytest.fixture(scope="session")

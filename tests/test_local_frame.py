@@ -14,7 +14,7 @@ import os
 import pytest
 from pyspark.sql.types import LongType, StructField, StructType
 
-from big_data__instagram_analysis_spark.io import local_frame
+from big_data__instagram_analysis_spark.io import bounded_collect, local_frame
 from big_data__instagram_analysis_spark.oracle import canonical_rows
 from big_data__instagram_analysis_spark.registry import get_specs
 
@@ -70,6 +70,17 @@ def test_local_frame_matches_create_dataframe(spark, case):
 def test_inline_values_source_is_local_table_scan(spark, sf_dir):
     df = get_specs()["inline_values_source"].fn(spark, sf_dir)
     assert _executed_plan(df).lstrip().startswith("LocalTableScan")
+
+
+def test_bounded_collect_is_one_job_and_respects_the_bound(spark, count_jobs):
+    """``bounded_collect`` returns the whole frame at exactly ``max_rows``
+    rows and None at one row over, each in one Spark job (a one-partition
+    frame, so ``CollectLimit`` needs no follow-on job)."""
+    df = spark.range(0, 50, 1, numPartitions=1)
+    jobs, pdf = count_jobs(lambda: bounded_collect(df, 50))
+    assert jobs == 1
+    assert sorted(pdf["id"].tolist()) == list(range(50))
+    assert count_jobs(lambda: bounded_collect(df, 49)) == (1, None)
 
 
 def _create_dataframe_sites() -> list[tuple[str, bool]]:

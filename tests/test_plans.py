@@ -10,11 +10,12 @@ filter still passes parity; it fails here.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
 
-from big_data__instagram_analysis_spark.io import load
+from big_data__instagram_analysis_spark.io import DEFAULT_SF_DIR, load
 from big_data__instagram_analysis_spark.registry import get_specs
 
 
@@ -441,19 +442,54 @@ def test_lsh_bucketed_scores_in_grouped_pandas(spark, sf_dir):
 
 
 def test_kmeans_assign_is_arrow_map_not_hof_join(spark, sf_dir):
-    """Round-4 Lloyd rewrite: the assign step must be a mapInPandas pass
-    (MapInPandas in the plan) with NO join against a centroid table —
-    vectors never shuffle for assignment."""
+    """Round-4 Lloyd rewrite: on the distributed rounds the assign step must
+    be a mapInPandas pass (MapInPandas in the plan) with NO join against a
+    centroid table — vectors never shuffle for assignment. At fixture scale
+    the default local finish returns the assignments as a LocalTableScan
+    with no Python operator."""
     from big_data__instagram_analysis_spark.io import load
     from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
 
+    def formatted(df):
+        return spark._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+
     emb = load(spark, sf_dir, "embeddings")
-    assigned, _ = kmeans_lloyd(emb, k=4, iterations=1)
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        assigned._jdf.queryExecution(), "formatted"
-    )
+    assigned, _ = kmeans_lloyd(emb, k=4, iterations=1, local_threshold=0)
+    plan = formatted(assigned)
     assert "MapInPandas" in plan, plan[:600]
     assert "Join" not in plan, plan[:600]
+    assigned, _ = kmeans_lloyd(emb, k=4, iterations=1)
+    plan = formatted(assigned)
+    assert "LocalTableScan" in plan, plan[:600]
+    assert "MapInPandas" not in plan, plan[:600]
+
+
+#: Physical operators that run Python worker tasks.
+_PYTHON_OPERATORS = (
+    "MapInPandas",
+    "MapInArrow",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+)
+
+
+@pytest.mark.parametrize("name", ["kmeans_clusters", "curation_pipeline"])
+def test_iterative_queries_start_no_python_worker(spark, name):
+    """At sf0.01 every SQL execution that building and collecting the
+    iterative workload's queries runs plans no Python operator: k-means and
+    connected components finish on the driver, and their driver-built
+    frames are LocalTableScans."""
+    sf = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
+    plans, _ = _executions_during(
+        spark, lambda: get_specs()[name].fn(spark, sf).toPandas()
+    )
+    assert plans, name
+    for plan in plans:
+        for op in _PYTHON_OPERATORS:
+            assert op not in plan, f"{name}: {op}\n{plan[:800]}"
 
 
 def test_dsir_broadcasts_model_and_takeordered_topk(spark, sf_dir):
@@ -606,12 +642,8 @@ SHINGLE_PAIR_CONSUMERS = (
 MINHASH_VERIFY_CONSUMERS = ("minhash_lsh_neardup", "minhash_lsh_dfcap")
 
 
-def _built_plans(spark, sf_dir, name: str) -> list[str]:
-    """Formatted plans of every SQL execution that building ``name`` ran
-    (eager checkpoints, connected-component rounds, lazy checkpoints'
-    plans) followed by the returned plan. Several consumers read the pair
-    frame only through such an execution, so their returned plan alone
-    never shows the pair join."""
+def _executions_during(spark, run):
+    """(formatted plans of every SQL execution ``run()`` started, its result)."""
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
 
@@ -621,12 +653,22 @@ def _built_plans(spark, sf_dir, name: str) -> list[str]:
         return [xs.apply(i) for i in range(xs.size())]
 
     seen = {x.executionId() for x in executions()}
-    df = get_specs()[name].fn(spark, sf_dir)
+    result = run()
     ran = [
         x.physicalPlanDescription()
         for x in executions()
         if x.executionId() not in seen
     ]
+    return ran, result
+
+
+def _built_plans(spark, sf_dir, name: str) -> list[str]:
+    """Formatted plans of every SQL execution that building ``name`` ran
+    (eager checkpoints, connected-component rounds, lazy checkpoints'
+    plans) followed by the returned plan. Several consumers read the pair
+    frame only through such an execution, so their returned plan alone
+    never shows the pair join."""
+    ran, df = _executions_during(spark, lambda: get_specs()[name].fn(spark, sf_dir))
     return ran + [
         spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     ]

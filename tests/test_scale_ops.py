@@ -19,6 +19,9 @@ from big_data__instagram_analysis_spark.operators.bloom import (
     build_bloom,
     might_contain,
 )
+from big_data__instagram_analysis_spark.operators.clustering import (
+    LOCAL_KMEANS_MAX_VALUES,
+)
 from big_data__instagram_analysis_spark.registry import get_specs
 
 
@@ -369,14 +372,27 @@ def _numpy_lloyd(sf_dir, k, iterations):
     return assign, inertia
 
 
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
-def test_kmeans_matches_numpy_reference(spark, sf):
+@pytest.mark.parametrize(
+    "sf, local_threshold",
+    [
+        pytest.param("sf0.001", LOCAL_KMEANS_MAX_VALUES, id="sf0.001"),
+        pytest.param("sf0.01", LOCAL_KMEANS_MAX_VALUES, id="sf0.01"),
+        pytest.param("sf0.001", 0, id="sf0.001-distributed"),
+        pytest.param("sf0.01", 0, id="sf0.01-distributed"),
+    ],
+)
+def test_kmeans_matches_numpy_reference(spark, sf, local_threshold):
     """The fused per-batch partial sums are the same Lloyd as a plain NumPy
-    loop: identical last-round assignments, inertia within 1e-9 relative."""
+    loop, on the driver-side finish (the default at fixture scale) and on
+    the distributed rounds: identical last-round assignments, inertia
+    within 1e-9 relative."""
     from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
 
     sf_dir = os.path.join(os.path.dirname(DEFAULT_SF_DIR), sf)
-    assigned, inertia = kmeans_lloyd(load(spark, sf_dir, "embeddings"), k=8, iterations=3)
+    assigned, inertia = kmeans_lloyd(
+        load(spark, sf_dir, "embeddings"), k=8, iterations=3,
+        local_threshold=local_threshold,
+    )
     ref_assign, ref_inertia = _numpy_lloyd(sf_dir, k=8, iterations=3)
     assert {r["vid"]: r["cluster_id"] for r in assigned.collect()} == ref_assign
     assert len(inertia) == len(ref_inertia) == 3
@@ -384,27 +400,40 @@ def test_kmeans_matches_numpy_reference(spark, sf):
         assert got == pytest.approx(want, rel=1e-9)
 
 
-def test_kmeans_one_job_per_round_and_nothing_held(spark, sf_dir):
-    """kmeans_lloyd launches the init job plus one job per round (counted by
-    global job id, as perfbench's JobProbe does) and leaves no persisted
-    frame behind."""
+def test_kmeans_one_job_per_round_and_nothing_held(spark, sf_dir, count_jobs):
+    """kmeans_lloyd's distributed rounds launch the init job plus one job
+    per round; the local finish launches the init and the bounded probe
+    only. Neither leaves a persisted frame behind."""
     from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
 
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def next_job_id(start=0):
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        while tracker.getJobInfo(start) is not None:
-            start += 1
-        return start
-
     emb = load(spark, sf_dir, "embeddings")
     persisted = sc._jsc.getPersistentRDDs().size()
-    before = next_job_id()
-    kmeans_lloyd(emb, k=8, iterations=3)
-    assert next_job_id(before) - before <= 3 + 1
-    assert sc._jsc.getPersistentRDDs().size() == persisted
+    for threshold, max_jobs in ((0, 3 + 1), (LOCAL_KMEANS_MAX_VALUES, 2)):
+        jobs, _ = count_jobs(
+            lambda: kmeans_lloyd(emb, k=8, iterations=3, local_threshold=threshold)
+        )
+        assert 0 < jobs <= max_jobs, threshold
+        assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_kmeans_local_bound_is_rows_times_dims(spark, sf_dir):
+    """A threshold of exactly rows × dims float64 values takes the local
+    finish (a LocalTableScan); one value fewer takes the distributed rounds
+    (a MapInPandas). Both give the same assignments and inertia."""
+    from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
+    from big_data__instagram_analysis_spark.oracle import canonical_rows
+
+    emb = load(spark, sf_dir, "embeddings")
+    values = emb.count() * len(emb.first()["embedding"])
+    local, local_inertia = kmeans_lloyd(emb, k=4, iterations=2, local_threshold=values)
+    dist, dist_inertia = kmeans_lloyd(
+        emb, k=4, iterations=2, local_threshold=values - 1
+    )
+    assert "LocalTableScan" in local._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in dist._jdf.queryExecution().executedPlan().toString()
+    assert canonical_rows(local.toPandas()) == canonical_rows(dist.toPandas())
+    assert local_inertia == pytest.approx(dist_inertia, rel=1e-9)
 
 
 def test_weighted_sample_deterministic_and_biased(spark, sf_dir):
