@@ -30,7 +30,9 @@ worker — and the assignments come back as an ``io.local_frame``
 ``LOCAL_CC_MAX_EDGES`` (Kiveris et al., SoCC'14): each ``mapInPandas``
 pass is a Python worker task with a fixed ≈0.2 s CPU start-up (PERF.md
 §76), while the NumPy work on a fixture-sized corpus takes milliseconds.
-Above the bound each round is one ``mapInPandas`` job: vectors never
+Above the bound the probe still runs — one more job, shipping up to
+``LOCAL_KMEANS_MAX_VALUES`` values (32 MB) to the driver and discarding
+them — and then each round is one ``mapInPandas`` job: vectors never
 shuffle and never leave their task, and the assignments are a lazy
 ``mapInPandas`` over the last round's centroids.
 
@@ -117,7 +119,6 @@ def kmeans_lloyd(
     vec_col: str = "embedding",
     k: int = 8,
     iterations: int = 3,
-    local_threshold: int = LOCAL_KMEANS_MAX_VALUES,
 ) -> tuple[DataFrame, list[float]]:
     """Run ``iterations`` Lloyd rounds; return (assignments, inertia).
 
@@ -126,13 +127,13 @@ def kmeans_lloyd(
     step (sum of squared distances to that round's centroids) — Lloyd
     guarantees the sequence is non-increasing.
 
-    Local finish: when the corpus holds at most ``local_threshold``
-    float64 values (rows × dims), the rounds run on the driver over one
-    bounded collect and the assignments come back as a ``LocalTableScan``
-    — Spark jobs: the init and the probe. Above it each round is one
-    ``mapInPandas`` job and the assignments stay a lazy ``mapInPandas`` —
-    Spark jobs: the init, the probe and one per round.
-    ``local_threshold=0`` forces the distributed rounds without a probe.
+    Local finish: when the corpus holds at most
+    ``LOCAL_KMEANS_MAX_VALUES`` float64 values (rows × dims, read at call
+    time), the rounds run on the driver over one bounded collect and the
+    assignments come back as a ``LocalTableScan`` — Spark jobs: the init
+    and the probe. Above it each round is one ``mapInPandas`` job and the
+    assignments stay a lazy ``mapInPandas`` — Spark jobs: the init, the
+    probe and one per round.
     """
     v = vectors.select(
         F.col(id_col).alias("vid"),
@@ -141,8 +142,7 @@ def kmeans_lloyd(
     cen = np.array(
         [r["vec"] for r in v.orderBy("vid").limit(k).collect()], dtype=np.float64
     )
-    max_rows = local_threshold // max(cen.shape[-1], 1)
-    local = bounded_collect(v, max_rows) if max_rows > 0 else None
+    local = bounded_collect(v, LOCAL_KMEANS_MAX_VALUES // max(cen.shape[-1], 1))
     inertia: list[float] = []
     last = cen
     for _ in range(iterations):

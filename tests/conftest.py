@@ -36,7 +36,7 @@ def count_jobs(spark):
         try:
             result = fn()
         finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.clearJobGroup()
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return len(sc.statusTracker().getJobIdsForGroup(group)), result
 

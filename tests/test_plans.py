@@ -441,14 +441,15 @@ def test_lsh_bucketed_scores_in_grouped_pandas(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_kmeans_assign_is_arrow_map_not_hof_join(spark, sf_dir):
-    """Round-4 Lloyd rewrite: on the distributed rounds the assign step must
-    be a mapInPandas pass (MapInPandas in the plan) with NO join against a
-    centroid table — vectors never shuffle for assignment. At fixture scale
-    the default local finish returns the assignments as a LocalTableScan
-    with no Python operator."""
+def test_kmeans_assign_is_arrow_map_not_hof_join(spark, sf_dir, monkeypatch):
+    """Round-4 Lloyd rewrite: on the distributed rounds (forced here by a
+    zero local bound) the assign step must be a mapInPandas pass
+    (MapInPandas in the plan) with NO join against a centroid table —
+    vectors never shuffle for assignment. At fixture scale the default
+    local finish returns the assignments as a LocalTableScan with no Python
+    operator."""
     from big_data__instagram_analysis_spark.io import load
-    from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
+    from big_data__instagram_analysis_spark.operators import clustering
 
     def formatted(df):
         return spark._jvm.PythonSQLUtils.explainString(
@@ -456,11 +457,13 @@ def test_kmeans_assign_is_arrow_map_not_hof_join(spark, sf_dir):
         )
 
     emb = load(spark, sf_dir, "embeddings")
-    assigned, _ = kmeans_lloyd(emb, k=4, iterations=1, local_threshold=0)
+    with monkeypatch.context() as m:
+        m.setattr(clustering, "LOCAL_KMEANS_MAX_VALUES", 0)
+        assigned, _ = clustering.kmeans_lloyd(emb, k=4, iterations=1)
     plan = formatted(assigned)
     assert "MapInPandas" in plan, plan[:600]
     assert "Join" not in plan, plan[:600]
-    assigned, _ = kmeans_lloyd(emb, k=4, iterations=1)
+    assigned, _ = clustering.kmeans_lloyd(emb, k=4, iterations=1)
     plan = formatted(assigned)
     assert "LocalTableScan" in plan, plan[:600]
     assert "MapInPandas" not in plan, plan[:600]

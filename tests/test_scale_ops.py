@@ -19,9 +19,7 @@ from big_data__instagram_analysis_spark.operators.bloom import (
     build_bloom,
     might_contain,
 )
-from big_data__instagram_analysis_spark.operators.clustering import (
-    LOCAL_KMEANS_MAX_VALUES,
-)
+from big_data__instagram_analysis_spark.operators import clustering
 from big_data__instagram_analysis_spark.registry import get_specs
 
 
@@ -373,63 +371,65 @@ def _numpy_lloyd(sf_dir, k, iterations):
 
 
 @pytest.mark.parametrize(
-    "sf, local_threshold",
+    "sf, distributed",
     [
-        pytest.param("sf0.001", LOCAL_KMEANS_MAX_VALUES, id="sf0.001"),
-        pytest.param("sf0.01", LOCAL_KMEANS_MAX_VALUES, id="sf0.01"),
-        pytest.param("sf0.001", 0, id="sf0.001-distributed"),
-        pytest.param("sf0.01", 0, id="sf0.01-distributed"),
+        pytest.param("sf0.001", False, id="sf0.001"),
+        pytest.param("sf0.01", False, id="sf0.01"),
+        pytest.param("sf0.001", True, id="sf0.001-distributed"),
+        pytest.param("sf0.01", True, id="sf0.01-distributed"),
     ],
 )
-def test_kmeans_matches_numpy_reference(spark, sf, local_threshold):
+def test_kmeans_matches_numpy_reference(spark, sf, distributed, monkeypatch):
     """The fused per-batch partial sums are the same Lloyd as a plain NumPy
     loop, on the driver-side finish (the default at fixture scale) and on
-    the distributed rounds: identical last-round assignments, inertia
-    within 1e-9 relative."""
-    from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
-
+    the distributed rounds (a zero local bound): identical last-round
+    assignments (each vector exactly once), inertia within 1e-9 relative
+    and never increasing round over round."""
+    if distributed:
+        monkeypatch.setattr(clustering, "LOCAL_KMEANS_MAX_VALUES", 0)
     sf_dir = os.path.join(os.path.dirname(DEFAULT_SF_DIR), sf)
-    assigned, inertia = kmeans_lloyd(
-        load(spark, sf_dir, "embeddings"), k=8, iterations=3,
-        local_threshold=local_threshold,
+    assigned, inertia = clustering.kmeans_lloyd(
+        load(spark, sf_dir, "embeddings"), k=8, iterations=3
     )
     ref_assign, ref_inertia = _numpy_lloyd(sf_dir, k=8, iterations=3)
-    assert {r["vid"]: r["cluster_id"] for r in assigned.collect()} == ref_assign
+    rows = assigned.collect()
+    assert len(rows) == len(ref_assign)
+    assert {r["vid"]: r["cluster_id"] for r in rows} == ref_assign
     assert len(inertia) == len(ref_inertia) == 3
+    assert all(b <= a * (1 + 1e-9) for a, b in zip(inertia, inertia[1:])), inertia
     for got, want in zip(inertia, ref_inertia):
         assert got == pytest.approx(want, rel=1e-9)
 
 
-def test_kmeans_one_job_per_round_and_nothing_held(spark, sf_dir, count_jobs):
-    """kmeans_lloyd's distributed rounds launch the init job plus one job
-    per round; the local finish launches the init and the bounded probe
-    only. Neither leaves a persisted frame behind."""
-    from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
-
+def test_kmeans_one_job_per_round_and_nothing_held(
+    spark, sf_dir, count_jobs, monkeypatch
+):
+    """kmeans_lloyd's local finish launches the init job and the bounded
+    probe only; above the bound (here a zero bound) the probe finds the
+    corpus too large and each round adds one job. Neither path leaves a
+    persisted frame behind."""
     sc = spark.sparkContext
     emb = load(spark, sf_dir, "embeddings")
     persisted = sc._jsc.getPersistentRDDs().size()
-    for threshold, max_jobs in ((0, 3 + 1), (LOCAL_KMEANS_MAX_VALUES, 2)):
-        jobs, _ = count_jobs(
-            lambda: kmeans_lloyd(emb, k=8, iterations=3, local_threshold=threshold)
-        )
-        assert 0 < jobs <= max_jobs, threshold
+    for bound, max_jobs in ((0, 2 + 3), (clustering.LOCAL_KMEANS_MAX_VALUES, 2)):
+        monkeypatch.setattr(clustering, "LOCAL_KMEANS_MAX_VALUES", bound)
+        jobs, _ = count_jobs(lambda: clustering.kmeans_lloyd(emb, k=8, iterations=3))
+        assert 0 < jobs <= max_jobs, bound
         assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
-def test_kmeans_local_bound_is_rows_times_dims(spark, sf_dir):
-    """A threshold of exactly rows × dims float64 values takes the local
-    finish (a LocalTableScan); one value fewer takes the distributed rounds
-    (a MapInPandas). Both give the same assignments and inertia."""
-    from big_data__instagram_analysis_spark.operators.clustering import kmeans_lloyd
+def test_kmeans_local_bound_is_rows_times_dims(spark, sf_dir, monkeypatch):
+    """A bound of exactly rows × dims float64 values takes the local finish
+    (a LocalTableScan); one value fewer takes the distributed rounds (a
+    MapInPandas). Both give the same assignments and inertia."""
     from big_data__instagram_analysis_spark.oracle import canonical_rows
 
     emb = load(spark, sf_dir, "embeddings")
     values = emb.count() * len(emb.first()["embedding"])
-    local, local_inertia = kmeans_lloyd(emb, k=4, iterations=2, local_threshold=values)
-    dist, dist_inertia = kmeans_lloyd(
-        emb, k=4, iterations=2, local_threshold=values - 1
-    )
+    monkeypatch.setattr(clustering, "LOCAL_KMEANS_MAX_VALUES", values)
+    local, local_inertia = clustering.kmeans_lloyd(emb, k=4, iterations=2)
+    monkeypatch.setattr(clustering, "LOCAL_KMEANS_MAX_VALUES", values - 1)
+    dist, dist_inertia = clustering.kmeans_lloyd(emb, k=4, iterations=2)
     assert "LocalTableScan" in local._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in dist._jdf.queryExecution().executedPlan().toString()
     assert canonical_rows(local.toPandas()) == canonical_rows(dist.toPandas())
