@@ -117,7 +117,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 25,
-    local_threshold: int = LOCAL_CC_MAX_EDGES,
 ) -> DataFrame:
     """Label every vertex of an undirected edge list with its component min.
 
@@ -133,15 +132,15 @@ def connected_components(
 
     Hybrid finish (round 8): at every round boundary the canonical edge set
     is already materialized (checkpointed), so its count is one cheap probe;
-    once it is ≤ ``local_threshold`` the closure finishes with driver-side
-    union-find instead of paying ~15 scheduler jobs per star round — the
-    Kiveris-et-al. single-machine tail. Star rounds only ever shrink the
-    edge set (contraction), so the local finish triggers for every graph
-    eventually; vertices are never dropped by a star round and contraction
-    preserves connectivity, so the min-label closure of the current edge set
-    equals that of the original. ``local_threshold=0`` forces the pure
-    distributed path (the property tests pin both against python
-    union-find).
+    once it is ≤ ``LOCAL_CC_MAX_EDGES`` (read at call time) the closure
+    finishes with driver-side union-find instead of paying ~15 scheduler
+    jobs per star round — the Kiveris-et-al. single-machine tail. Star
+    rounds only ever shrink the edge set (contraction), so the local finish
+    triggers for every graph eventually; vertices are never dropped by a
+    star round and contraction preserves connectivity, so the min-label
+    closure of the current edge set equals that of the original. The
+    property tests patch the bound to 0 to force the pure distributed path
+    and pin both paths against python union-find.
     """
     from pyspark.sql.types import StructField, StructType
 
@@ -159,12 +158,12 @@ def connected_components(
     for _ in range(max_rounds):
         # Size probe and collect in one action (io.bounded_collect); above
         # the bound it ships threshold+1 edge rows (~3 MB Arrow at the default).
-        pdf = bounded_collect(e, local_threshold)
+        pdf = bounded_collect(e, LOCAL_CC_MAX_EDGES)
         if pdf is not None:
             labels = _local_components(
                 zip(pdf["a"].tolist(), pdf["b"].tolist())
             )
-            # ≤ 2 × local_threshold label rows (≈6 MB at the default bound,
+            # ≤ 2 × LOCAL_CC_MAX_EDGES label rows (≈6 MB at the default bound,
             # under Arrow's 48 MB localRelationThreshold) go back as a
             # LocalTableScan. The pickled createDataFrame path ran
             # defaultParallelism Python worker tasks, ≈0.2 s of CPU each,
@@ -204,10 +203,9 @@ def attach_components(
     id_col: str,
     src: str = "src",
     dst: str = "dst",
-    local_threshold: int = LOCAL_CC_MAX_EDGES,
 ) -> DataFrame:
     """Label every row of ``nodes`` with its component (itself if isolated)."""
-    cc = connected_components(edges, src=src, dst=dst, local_threshold=local_threshold)
+    cc = connected_components(edges, src=src, dst=dst)
     joined = nodes.join(cc, nodes[id_col] == cc["node"], "left")
     return joined.select(
         *[nodes[c] for c in nodes.columns],

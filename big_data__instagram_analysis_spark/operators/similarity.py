@@ -15,10 +15,14 @@ Design for 100 TB:
     ``bucketed_random_projection`` (pyspark.ml), which replaces the
     quadratic pair space with per-bucket joins.
 
-Parity note: the final ROUND + (sim, ids) ordering happens in Spark
-expressions (same HALF_UP semantics as the DuckDB oracle); the UDF emits raw
-doubles and keeps every pair within ROUND_MARGIN of its chunk's k-th best so
-rounding can never change which rows survive chunk pruning.
+Shared core: every kernel of the cosine family (these operators and
+queries/llm_similarity.py) normalizes with ``unit_rows``, broadcasts a
+collected small side through ``broadcast_unit_rows`` (which runs the
+``check_broadcast_bytes`` guard), prunes with ``band_select`` and
+recomputes exact cosines with ``cosine_hof``. Kernels emit raw doubles; the
+final ROUND + (sim, ids) ordering happens in Spark expressions (same
+HALF_UP semantics as the DuckDB oracle), and the ROUND_MARGIN band keeps
+every row that can still win after rounding (README "Cosine core").
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Keep chunk-local candidates within this raw-sim margin of the k-th best —
@@ -55,34 +59,93 @@ BROADCAST_MATRIX_MAX_BYTES = int(
 )
 
 
-def _to_matrix(pdf: pd.DataFrame, vec_col: str) -> np.ndarray:
-    return np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
+def unit_rows(pdf: pd.DataFrame, vec_col: str, dim: int | None = None) -> np.ndarray:
+    """The float64 matrix of ``pdf[vec_col]`` (its first ``dim`` components
+    when given) with each row divided by its L2 norm.
+
+    The one normalize of the cosine family. The division allocates a fresh
+    C-contiguous matrix, so a prefix slice reaches BLAS in the same layout
+    as a contiguous copy of it would.
+    """
+    mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)[:, :dim]
+    return mat / np.linalg.norm(mat, axis=1, keepdims=True)
 
 
-def _broadcast_normalized(
-    df: DataFrame, spark: SparkSession, id_col: str, vec_col: str, *, caller: str
-):
-    """Materialize (ids, row-normalized float64 matrix) and broadcast it.
+def check_broadcast_bytes(caller: str, *mats: np.ndarray) -> None:
+    """Enforce BROADCAST_MATRIX_MAX_BYTES on the matrices about to broadcast.
 
-    Enforces BROADCAST_MATRIX_MAX_BYTES — the documented "one side fits"
-    memory contract — with an error that names the sub-quadratic
+    The documented "one side fits" memory contract: past the bound the
+    caller fails fast with an error that names the sub-quadratic
     alternatives, instead of letting a 100 TB misuse OOM an executor.
     """
-    pdf = df.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy().astype(np.int64)
-    mat = _to_matrix(pdf, vec_col)
-    if mat.nbytes > BROADCAST_MATRIX_MAX_BYTES:
+    nbytes = sum(m.nbytes for m in mats)
+    if nbytes > BROADCAST_MATRIX_MAX_BYTES:
         raise ValueError(
-            f"{caller}: broadcast side is {mat.nbytes / 2**30:.2f} GiB of "
-            f"float64 ({mat.shape[0]} vectors × dim {mat.shape[1]}), above "
-            f"the {BROADCAST_MATRIX_MAX_BYTES / 2**30:.2f} GiB brute-force "
+            f"{caller}: broadcast side is {nbytes / 2**30:.2f} GiB of "
+            f"float64 ({mats[0].shape[0]} vectors), above the "
+            f"{BROADCAST_MATRIX_MAX_BYTES / 2**30:.2f} GiB brute-force "
             "contract. Use the sub-quadratic paths (ann_lsh_bucketed / "
             "ann_ivf_probe, queries/llm_similarity.py) or raise "
             "SPARK_GRAFT_BROADCAST_MATRIX_MAX_BYTES if your executors can "
             "hold it."
         )
-    normed = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    return spark.sparkContext.broadcast((ids, normed))
+
+
+def broadcast_unit_rows(
+    spark: SparkSession,
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    *extra: str,
+    caller: str,
+):
+    """Collect ``df`` once, guard its size and broadcast
+    ``(ids, unit_rows, *extra columns)``.
+
+    Returns the broadcast and the collected frame (for a caller that needs
+    the raw vectors on the driver as well).
+    """
+    pdf = df.select(id_col, vec_col, *extra).toPandas()
+    unit = unit_rows(pdf, vec_col)
+    check_broadcast_bytes(caller, unit)
+    ids = pdf[id_col].to_numpy().astype(np.int64)
+    cols = (pdf[c].to_numpy() for c in extra)
+    return spark.sparkContext.broadcast((ids, unit, *cols)), pdf
+
+
+def band_select(
+    sims: np.ndarray, valid: np.ndarray | bool, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(row, col) indices, row-major, of the valid entries of ``sims`` within
+    ROUND_MARGIN of their row's k-th best valid entry.
+
+    ``valid`` is a boolean mask broadcastable to ``sims`` (``True`` for all
+    entries). A row with at most k valid entries keeps all of them: its
+    k-th best of the masked row is a valid entry's value or ``-inf``.
+    """
+    masked = np.where(valid, sims, -np.inf)
+    cut = sims.shape[1] - min(k, sims.shape[1])
+    kth = np.partition(masked, cut, axis=1)[:, cut, None]
+    return np.nonzero(valid & (masked >= kth - ROUND_MARGIN))
+
+
+def cosine_hof(a: Column, b: Column) -> Column:
+    """Exact cosine of two float-array columns in Catalyst expressions.
+
+    Elements are cast to double and every dot product folds left to right
+    (``aggregate`` over ``zip_with``), like DuckDB's sequential
+    ``list_sum``: bit-identical doubles, at the cost of interpreted
+    evaluation. A norm is ``sqrt(dot(a, a))``, the same products in the
+    same order as ``sqrt(aggregate(transform(a, x -> x * x)))``.
+    """
+    a, b = (F.transform(c, lambda x: x.cast("double")) for c in (a, b))
+
+    def dot(x: Column, y: Column) -> Column:
+        return F.aggregate(
+            F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, v: acc + v
+        )
+
+    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 def cosine_topk_allpairs(
@@ -101,7 +164,9 @@ def cosine_topk_allpairs(
     mapInPandas in Arrow batches. Emits (vec_a, vec_b, sim) with sim rounded
     via Spark's ROUND so the oracle comparison shares rounding semantics.
     """
-    bc = _broadcast_normalized(emb, spark, id_col, vec_col, caller="cosine_topk_allpairs")
+    bc, _ = broadcast_unit_rows(
+        spark, emb, id_col, vec_col, caller="cosine_topk_allpairs"
+    )
 
     out_schema = "vec_a long, vec_b long, sim double"
 
@@ -111,7 +176,7 @@ def cosine_topk_allpairs(
             if pdf.empty:
                 continue
             a_ids_all = pdf[id_col].to_numpy().astype(np.int64)
-            a_mat_all = _to_matrix(pdf, vec_col)
+            na_all = unit_rows(pdf, vec_col)
             # Row-sliced matmul (round 10): an Arrow batch can be the whole
             # table at bench tier (one scan split), and a full-batch
             # |batch|×|B| sims matrix plus its boolean mask/gather
@@ -125,9 +190,7 @@ def cosine_topk_allpairs(
             # top-k keeps the emitted rows O(k) per slice.
             for st in range(0, len(a_ids_all), SIM_CHUNK):
                 a_ids = a_ids_all[st : st + SIM_CHUNK]
-                a_mat = a_mat_all[st : st + SIM_CHUNK]
-                na = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
-                sims = na @ nb.T  # (chunk, |B|)
+                sims = na_all[st : st + SIM_CHUNK] @ nb.T  # (chunk, |B|)
                 mask = a_ids[:, None] < ids_b[None, :]
                 flat = sims[mask]
                 if flat.size == 0:
@@ -171,7 +234,9 @@ def cosine_topk_queries(
     Broadcast the query matrix; stream the corpus; per-task top-k per query;
     global rank window cuts to k. Output (query_id, neighbor_id, sim, rank).
     """
-    bc = _broadcast_normalized(queries, spark, id_col, vec_col, caller="cosine_topk_queries")
+    bc, _ = broadcast_unit_rows(
+        spark, queries, id_col, vec_col, caller="cosine_topk_queries"
+    )
 
     out_schema = "query_id long, neighbor_id long, sim double"
 
@@ -181,32 +246,11 @@ def cosine_topk_queries(
             if pdf.empty:
                 continue
             c_ids = pdf[id_col].to_numpy().astype(np.int64)
-            c_mat = _to_matrix(pdf, vec_col)
-            nc = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = nq @ nc.T  # (|Q|, chunk)
-            mask = ids_q[:, None] != c_ids[None, :]
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(ids_q)):
-                row = sims[qi]
-                valid = np.nonzero(mask[qi])[0]
-                if valid.size == 0:
-                    continue
-                take = valid
-                if valid.size > k:
-                    vals = row[valid]
-                    kth = np.partition(vals, vals.size - k)[vals.size - k]
-                    take = valid[vals >= kth - ROUND_MARGIN]
-                out_q.append(np.full(take.size, ids_q[qi]))
-                out_n.append(c_ids[take])
-                out_s.append(row[take])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "sim": np.concatenate(out_s),
-                    }
-                )
+            sims = nq @ unit_rows(pdf, vec_col).T  # (|Q|, chunk)
+            qi, ci = band_select(sims, ids_q[:, None] != c_ids[None, :], k)
+            yield pd.DataFrame(
+                {"query_id": ids_q[qi], "neighbor_id": c_ids[ci], "sim": sims[qi, ci]}
+            )
 
     from pyspark.sql.window import Window
 
@@ -251,7 +295,9 @@ def cosine_threshold_pairs(
          DuckDB oracle's sequential list_sum, while the heavy math stayed in
          numpy. The margin guarantees no true pair is lost in phase 1.
     """
-    bc = _broadcast_normalized(emb, spark, id_col, vec_col, caller="cosine_threshold_pairs")
+    bc, _ = broadcast_unit_rows(
+        spark, emb, id_col, vec_col, caller="cosine_threshold_pairs"
+    )
     cut = threshold - ROUND_MARGIN
 
     def chunk_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -260,9 +306,7 @@ def cosine_threshold_pairs(
             if pdf.empty:
                 continue
             a_ids = pdf[id_col].to_numpy().astype(np.int64)
-            a_mat = _to_matrix(pdf, vec_col)
-            na = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
-            sims = na @ nb.T
+            sims = unit_rows(pdf, vec_col) @ nb.T
             mask = (a_ids[:, None] < ids_b[None, :]) & (sims >= cut)
             ai, bi = np.nonzero(mask)
             if ai.size:
@@ -272,23 +316,9 @@ def cosine_threshold_pairs(
         chunk_pairs, "vec_a long, vec_b long"
     )
 
-    ed = emb.select(
-        F.col(id_col), F.transform(vec_col, lambda x: x.cast("double")).alias("emb")
-    )
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-        )
-
-    def _norm(a):
-        return F.sqrt(
-            F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-        )
-
-    a_side = ed.select(F.col(id_col).alias("vec_a"), F.col("emb").alias("ea"))
-    b_side = ed.select(F.col(id_col).alias("vec_b"), F.col("emb").alias("eb"))
-    sim = _dot(F.col("ea"), F.col("eb")) / (_norm(F.col("ea")) * _norm(F.col("eb")))
+    a_side = emb.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("ea"))
+    b_side = emb.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("eb"))
+    sim = cosine_hof(F.col("ea"), F.col("eb"))
     return (
         cand.join(a_side, "vec_a")
         .join(b_side, "vec_b")
@@ -304,24 +334,9 @@ def cosine_allpairs_hof(emb: DataFrame, *, threshold: float) -> DataFrame:
     bit-identical doubles — at the cost of interpreted evaluation. Quadratic:
     small candidate sets only.
     """
-    ed = emb.select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
-    )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-        )
-
-    def norm(a):
-        return F.sqrt(
-            F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-        )
-
+    ed = emb.select("vec_id", F.col("embedding").alias("emb"))
     a, b = ed.alias("a"), ed.alias("b")
-    sim = dot(F.col("a.emb"), F.col("b.emb")) / (
-        norm(F.col("a.emb")) * norm(F.col("b.emb"))
-    )
+    sim = cosine_hof(F.col("a.emb"), F.col("b.emb"))
     return (
         a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
         .select(

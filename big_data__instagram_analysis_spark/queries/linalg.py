@@ -272,14 +272,18 @@ POWER_NORM = 10_000
 
 
 def _power_step_sql(k: int) -> str:
-    """One integer power-iteration round as chained-CTE SQL (DuckDB)."""
-    return f""", y{k} AS (
+    """One integer power-iteration round as chained-CTE SQL (DuckDB).
+
+    y is read twice in its round (by m and x), and DuckDB inlines a CTE
+    into each reader, so an inlined chain doubles its work every round:
+    y and x, the round's output, are ``AS MATERIALIZED``."""
+    return f""", y{k} AS MATERIALIZED (
   SELECT g.i AS i, sum(g.v * x{k - 1}.x) AS y
   FROM gfull g JOIN x{k - 1} ON g.j = x{k - 1}.i
   GROUP BY g.i
 ), m{k} AS (
   SELECT greatest(max(abs(y)) // {POWER_NORM}, 1) AS m FROM y{k}
-), x{k} AS (
+), x{k} AS MATERIALIZED (
   SELECT i, CAST(CASE WHEN y >= 0 THEN y // m ELSE -((-y) // m) END AS BIGINT)
            AS x
   FROM y{k}, m{k}

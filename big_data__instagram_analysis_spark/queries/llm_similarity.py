@@ -28,7 +28,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load, local_frame
-from ..operators.similarity import cosine_topk_queries
+from ..operators.similarity import (
+    ROUND_MARGIN,
+    band_select,
+    broadcast_unit_rows,
+    check_broadcast_bytes,
+    cosine_hof,
+    cosine_topk_queries,
+    unit_rows,
+)
 from ..registry import query
 
 #: Every 25th vector is a "query"; the rest are corpus. Deterministic split.
@@ -163,8 +171,7 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in batches:
             if b.empty:
                 continue
-            m = np.stack(b["embedding"].to_numpy()).astype(np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
+            m = unit_rows(b, "embedding")
             h = np.floor((m @ pr.T) / LSH_BUCKET_LEN).astype(np.int64)
             n = len(b)
             # embedding rides along so the per-bucket scorer needs no
@@ -242,46 +249,35 @@ def _lsh_blocked(buckets: DataFrame) -> DataFrame:
     )
 
 
-_EMPTY_PAIRS = pd.DataFrame(
-    {"vec_a": [], "vec_b": [], "cos_sim": []}
-).astype({"vec_a": np.int64, "vec_b": np.int64, "cos_sim": np.float64})
-
-
-def _block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+def _scored_block_pairs(pdf: pd.DataFrame, cut: float):
     """Score one (band, bucket, bi, bj) group: chunked brute-force cosine.
 
-    Diagonal groups (bi == bj) score the upper triangle of one block;
-    off-diagonal groups score the full cross product of two blocks. The
-    left side streams through in LSH_SCORE_CHUNK-row slices so the sim
-    matrix never exceeds chunk × |right| doubles.
+    Returns (vec_a, vec_b, sim) arrays, vec_a < vec_b, of the pairs with
+    raw sim ≥ ``cut``. Diagonal groups (bi == bj) score the upper triangle
+    of one block; off-diagonal groups score the full cross product of two
+    blocks. The left side streams through in LSH_SCORE_CHUNK-row slices so
+    the sim matrix never exceeds chunk × |right| doubles.
     """
-    if len(pdf) < 2:
-        return _EMPTY_PAIRS
     bi = int(pdf["bi"].iat[0])
     bj = int(pdf["bj"].iat[0])
     diagonal = bi == bj
-    if diagonal:
-        left = right = pdf
-    else:
+    left = right = pdf
+    if not diagonal:
         left = pdf[pdf["block"] == bi]
         right = pdf[pdf["block"] == bj]
-        if left.empty or right.empty:
-            return _EMPTY_PAIRS
+    if len(pdf) < 2 or left.empty or right.empty:
+        no_ids = np.empty(0, np.int64)
+        return no_ids, no_ids, np.empty(0)
     ids_l = left["vec_id"].to_numpy()
     ids_r = right["vec_id"].to_numpy()
-    ml = np.stack(left["embedding"].to_numpy()).astype(np.float64)
-    ml = ml / np.linalg.norm(ml, axis=1, keepdims=True)
-    if diagonal:
-        mr = ml
-    else:
-        mr = np.stack(right["embedding"].to_numpy()).astype(np.float64)
-        mr = mr / np.linalg.norm(mr, axis=1, keepdims=True)
+    ml = unit_rows(left, "embedding")
+    mr = ml if diagonal else unit_rows(right, "embedding")
     outs_a: list[np.ndarray] = []
     outs_b: list[np.ndarray] = []
     outs_s: list[np.ndarray] = []
     for s in range(0, len(ml), LSH_SCORE_CHUNK):
         sim = ml[s : s + LSH_SCORE_CHUNK] @ mr.T
-        il, ir = np.where(sim >= LSH_COS_CUT)
+        il, ir = np.where(sim >= cut)
         gl = il + s
         if diagonal:
             keep = gl < ir  # upper triangle, matching the pre-block form
@@ -289,17 +285,18 @@ def _block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         outs_a.append(ids_l[gl])
         outs_b.append(ids_r[ir])
         outs_s.append(sim[il, ir])
-    a_ids = np.concatenate(outs_a)
-    b_ids = np.concatenate(outs_b)
-    sims = np.concatenate(outs_s)
+    a_ids = np.concatenate(outs_a).astype(np.int64)
+    b_ids = np.concatenate(outs_b).astype(np.int64)
     swap = a_ids > b_ids
-    a_ids, b_ids = np.where(swap, b_ids, a_ids), np.where(swap, a_ids, b_ids)
+    sims = np.concatenate(outs_s)
+    return np.where(swap, b_ids, a_ids), np.where(swap, a_ids, b_ids), sims
+
+
+def _block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+    """LSH scorer: the group's pairs clearing LSH_COS_CUT, sims at 6 dp."""
+    a_ids, b_ids, sims = _scored_block_pairs(pdf, LSH_COS_CUT)
     return pd.DataFrame(
-        {
-            "vec_a": a_ids.astype(np.int64),
-            "vec_b": b_ids.astype(np.int64),
-            "cos_sim": np.round(sims, 6),
-        }
+        {"vec_a": a_ids, "vec_b": b_ids, "cos_sim": np.round(sims, 6)}
     )
 
 
@@ -408,8 +405,7 @@ def _ivf_train_centroids(emb: DataFrame) -> np.ndarray:
     standard IVF training recipe (coarse quantizers don't need convergence
     on the full data — FAISS trains on samples too)."""
     pdf = _ivf_training_sample(emb).toPandas()
-    mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    mat = unit_rows(pdf, "embedding")
     rng = np.random.default_rng(7)
     cents = mat[rng.choice(len(mat), IVF_NCELLS, replace=False)]
     for _ in range(10):
@@ -440,13 +436,11 @@ def _ivf_probe_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in batches:
             if b.empty:
                 continue
-            m = np.stack(b["embedding"].to_numpy()).astype(np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
             yield pd.DataFrame(
                 {
                     "vec_id": b["vec_id"],
                     "embedding": b["embedding"],
-                    "cell": np.argmax(m @ cent.T, axis=1),
+                    "cell": np.argmax(unit_rows(b, "embedding") @ cent.T, axis=1),
                 }
             )
 
@@ -466,9 +460,7 @@ def _ivf_probe_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in batches:
             if b.empty:
                 continue
-            m = np.stack(b["embedding"].to_numpy()).astype(np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            top = np.argsort(-(m @ cent.T), axis=1)[:, :3]
+            top = np.argsort(-(unit_rows(b, "embedding") @ cent.T), axis=1)[:, :3]
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(b["vec_id"].to_numpy(), 3),
@@ -622,78 +614,20 @@ SEMDEDUP_K = 8
 SEMDEDUP_TAU = 0.35
 
 
-def _vec_double(col: str):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def _l2(a):
-    return F.sqrt(_dot(a, a))
-
-
-_EMPTY_SEM_PAIRS = pd.DataFrame(
-    {"cluster_id": [], "vec_a": [], "vec_b": []}
-).astype({"cluster_id": np.int64, "vec_a": np.int64, "vec_b": np.int64})
-
-
 def _semdedup_block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Score one (band, cluster, bi, bj) group: candidate pairs ≥ τ − margin.
+    """SemDeDup scorer: the group's candidate pairs at τ − ROUND_MARGIN.
 
-    Same chunked block-pair brute force as _block_pairs, but emits bare id
-    pairs under a SAFETY-MARGIN cut — the exact HOF recompute downstream
-    applies the true rounded threshold, so the hash is engine-exact while
-    the quadratic pair space stays in numpy (the cosine_threshold_pairs
-    two-phase pattern, per semantic cluster)."""
-    from ..operators.similarity import ROUND_MARGIN
-
-    if len(pdf) < 2:
-        return _EMPTY_SEM_PAIRS
-    cut = SEMDEDUP_TAU - ROUND_MARGIN
-    bi = int(pdf["bi"].iat[0])
-    bj = int(pdf["bj"].iat[0])
-    cluster = int(pdf["bucket"].iat[0])
-    diagonal = bi == bj
-    if diagonal:
-        left = right = pdf
-    else:
-        left = pdf[pdf["block"] == bi]
-        right = pdf[pdf["block"] == bj]
-        if left.empty or right.empty:
-            return _EMPTY_SEM_PAIRS
-    ids_l = left["vec_id"].to_numpy()
-    ids_r = right["vec_id"].to_numpy()
-    ml = np.stack(left["embedding"].to_numpy()).astype(np.float64)
-    ml = ml / np.linalg.norm(ml, axis=1, keepdims=True)
-    if diagonal:
-        mr = ml
-    else:
-        mr = np.stack(right["embedding"].to_numpy()).astype(np.float64)
-        mr = mr / np.linalg.norm(mr, axis=1, keepdims=True)
-    outs_a: list[np.ndarray] = []
-    outs_b: list[np.ndarray] = []
-    for s in range(0, len(ml), LSH_SCORE_CHUNK):
-        sim = ml[s : s + LSH_SCORE_CHUNK] @ mr.T
-        il, ir = np.where(sim >= cut)
-        gl = il + s
-        if diagonal:
-            keep = gl < ir
-            ir, gl = ir[keep], gl[keep]
-        outs_a.append(ids_l[gl])
-        outs_b.append(ids_r[ir])
-    a_ids = np.concatenate(outs_a)
-    b_ids = np.concatenate(outs_b)
-    swap = a_ids > b_ids
-    a_ids, b_ids = np.where(swap, b_ids, a_ids), np.where(swap, a_ids, b_ids)
+    Emits bare id pairs under a safety-margin cut: the exact HOF recompute
+    downstream applies the true rounded threshold, so the hash is
+    engine-exact while the quadratic pair space stays in numpy (the
+    cosine_threshold_pairs two-phase pattern, per semantic cluster)."""
+    a_ids, b_ids, _ = _scored_block_pairs(pdf, SEMDEDUP_TAU - ROUND_MARGIN)
+    cluster = pdf["bucket"].iat[0]
     return pd.DataFrame(
         {
             "cluster_id": np.full(a_ids.size, cluster, dtype=np.int64),
-            "vec_a": a_ids.astype(np.int64),
-            "vec_b": b_ids.astype(np.int64),
+            "vec_a": a_ids,
+            "vec_b": b_ids,
         }
     )
 
@@ -782,25 +716,20 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from ..operators.similarity import ROUND_MARGIN
-
     emb = load(spark, sf_dir, "embeddings")
 
-    cent_rows = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(SEMDEDUP_K)
-        .collect()
+    codebook = emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id").limit(
+        SEMDEDUP_K
     )
-    cent_ids = np.array([r.vec_id for r in cent_rows], dtype=np.int64)
-    cmat = np.stack(
-        [np.asarray(r.embedding, dtype=np.float64) for r in cent_rows]
+    bc, cent = broadcast_unit_rows(
+        spark, codebook, "vec_id", "embedding", caller="semantic_dedup_clusters"
     )
-    cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((cent_ids, cmat))
     cent_df = local_frame(
         spark,
-        [(int(r.vec_id), [float(x) for x in r.embedding]) for r in cent_rows],
+        [
+            (int(i), [float(x) for x in v])
+            for i, v in zip(cent["vec_id"], cent["embedding"])
+        ],
         "centroid_id long, cvec array<double>",
     )
 
@@ -809,11 +738,7 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in batches:
             if b.empty:
                 continue
-            m = np.stack(b["embedding"].to_numpy()).astype(np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = m @ cm.T
-            mx = sims.max(axis=1, keepdims=True)
-            ri, ci = np.nonzero(sims >= mx - ROUND_MARGIN)
+            ri, ci = band_select(unit_rows(b, "embedding") @ cm.T, True, 1)
             yield pd.DataFrame(
                 {
                     "vec_id": b["vec_id"].to_numpy()[ri],
@@ -826,9 +751,7 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand, "vec_id long, centroid_id long, embedding array<float>"
     )
 
-    ev = _vec_double("embedding")
-    cv = F.col("cvec")
-    sim_r = F.round(_dot(ev, cv) / (_l2(ev) * _l2(cv)), 6)
+    sim_r = F.round(cosine_hof(F.col("embedding"), F.col("cvec")), 6)
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim_r"), "centroid_id")
     assign = (
         cands.join(F.broadcast(cent_df), "centroid_id")
@@ -854,16 +777,9 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    ea = emb.select(
-        F.col("vec_id").alias("vec_a"), _vec_double("embedding").alias("va")
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("vec_b"), _vec_double("embedding").alias("vb")
-    )
-    pair_sim = F.round(
-        _dot(F.col("va"), F.col("vb")) / (_l2(F.col("va")) * _l2(F.col("vb"))),
-        6,
-    )
+    ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"))
+    eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"))
+    pair_sim = F.round(cosine_hof(F.col("va"), F.col("vb")), 6)
     confirmed = (
         cand_pairs.join(ea, "vec_a")
         .join(eb, "vec_b")
@@ -914,12 +830,6 @@ def _mrl_ranked_sweep(spark: SparkSession, emb: DataFrame) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from ..operators.similarity import (
-        BROADCAST_MATRIX_MAX_BYTES,
-        ROUND_MARGIN,
-        _to_matrix,
-    )
-
     full_dim = MRL_DIMS[-1]
     qpdf = (
         emb.where(F.col("vec_id") % QUERY_MOD == 0)
@@ -927,16 +837,8 @@ def _mrl_ranked_sweep(spark: SparkSession, emb: DataFrame) -> DataFrame:
         .toPandas()
     )
     ids_q = qpdf["vec_id"].to_numpy().astype(np.int64)
-    qmat = _to_matrix(qpdf, "embedding")
-    if qmat.nbytes * 2 > BROADCAST_MATRIX_MAX_BYTES:
-        raise ValueError(
-            "matryoshka_truncation_audit: query matrix exceeds the "
-            "brute-force broadcast contract (operators/similarity.py)"
-        )
-    qn = {}
-    for d in MRL_DIMS:
-        md = np.ascontiguousarray(qmat[:, :d])
-        qn[d] = md / np.linalg.norm(md, axis=1, keepdims=True)
+    qn = {d: unit_rows(qpdf, "embedding", d) for d in MRL_DIMS}
+    check_broadcast_bytes("matryoshka_truncation_audit", *qn.values())
     bc = spark.sparkContext.broadcast((ids_q, qn))
     ks = {d: (5 if d == full_dim else 1) for d in MRL_DIMS}
 
@@ -946,38 +848,18 @@ def _mrl_ranked_sweep(spark: SparkSession, emb: DataFrame) -> DataFrame:
             if pdf.empty:
                 continue
             c_ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            c_mat = _to_matrix(pdf, "embedding")
             mask = b_ids_q[:, None] != c_ids[None, :]
             for d, nqd in b_qn.items():
-                cd = np.ascontiguousarray(c_mat[:, :d])
-                nc = cd / np.linalg.norm(cd, axis=1, keepdims=True)
-                sims = nqd @ nc.T
-                k = ks[d]
-                out_q, out_n, out_s = [], [], []
-                for qi in range(len(b_ids_q)):
-                    row = sims[qi]
-                    valid = np.nonzero(mask[qi])[0]
-                    if valid.size == 0:
-                        continue
-                    take = valid
-                    if valid.size > k:
-                        vals = row[valid]
-                        kth = np.partition(vals, vals.size - k)[vals.size - k]
-                        take = valid[vals >= kth - ROUND_MARGIN]
-                    out_q.append(np.full(take.size, b_ids_q[qi]))
-                    out_n.append(c_ids[take])
-                    out_s.append(row[take])
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "dim": np.full(
-                                sum(a.size for a in out_q), d, dtype=np.int32
-                            ),
-                            "query_id": np.concatenate(out_q),
-                            "neighbor_id": np.concatenate(out_n),
-                            "sim": np.concatenate(out_s),
-                        }
-                    )
+                sims = nqd @ unit_rows(pdf, "embedding", d).T
+                qi, ci = band_select(sims, mask, ks[d])
+                yield pd.DataFrame(
+                    {
+                        "dim": np.full(qi.size, d, dtype=np.int32),
+                        "query_id": b_ids_q[qi],
+                        "neighbor_id": c_ids[ci],
+                        "sim": sims[qi, ci],
+                    }
+                )
 
     cand = emb.select("vec_id", "embedding").mapInPandas(
         chunk, "dim int, query_id long, neighbor_id long, sim double"
@@ -1078,7 +960,7 @@ def matryoshka_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the BLAS inputs match the old per-dim scans bit-for-bit), chunk
     # pruning keeps the same per-(batch, dim, query) k+margin band, and the
     # final round/ordering contract is the ann one.
-    ranked = _mrl_ranked_sweep(spark, emb).localCheckpoint(eager=False)
+    ranked = _mrl_ranked_sweep(spark, emb).localCheckpoint(eager=True)
     full_dim = MRL_DIMS[-1]
     full1 = ranked.where(
         (F.col("dim") == full_dim) & (F.col("rank") == 1)
@@ -1191,8 +1073,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     match the oracle exactly; the oracle recomputes through a full lateral
     pair scan.
     """
-    from ..operators.similarity import ROUND_MARGIN, _to_matrix
-
     emb = load(spark, sf_dir, "embeddings")
     anchors = emb.where(F.col("vec_id") % QUERY_MOD == 0)
     # Scale-adaptive anchor cap (HN_ANCHOR_CAP above): identity at every
@@ -1203,41 +1083,32 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_mod = anchors.count()
     bucket = ((F.col("vec_id") % 1000003) * F.lit(2654435761)) % 100000
     anchors = anchors.where(bucket * F.lit(n_mod) < F.lit(100000 * HN_ANCHOR_CAP))
-    apdf = anchors.select("vec_id", "label", "embedding").toPandas()
-    a_ids = apdf["vec_id"].to_numpy().astype(np.int64)
-    a_labels = apdf["label"].to_numpy().astype(np.int64)
-    a_mat = _to_matrix(apdf, "embedding")
-    a_norm = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((a_ids, a_labels, a_norm))
+    bc, _ = broadcast_unit_rows(
+        spark, anchors, "vec_id", "embedding", "label", caller="hard_negative_mining"
+    )
 
     out_schema = "query_id long, cls string, cand_id long, sim double"
 
     def chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_a, labels_a, na = bc.value
+        ids_a, na, labels_a = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             c_ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            c_labels = pdf["label"].to_numpy().astype(np.int64)
-            c_mat = _to_matrix(pdf, "embedding")
-            nc = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = na @ nc.T  # (|anchors|, chunk)
+            c_labels = pdf["label"].to_numpy()
+            sims = na @ unit_rows(pdf, "embedding").T  # (|anchors|, chunk)
             not_self = ids_a[:, None] != c_ids[None, :]
             same = (labels_a[:, None] == c_labels[None, :]) & not_self
-            out = {"query_id": [], "cls": [], "cand_id": [], "sim": []}
-            for qi in range(len(ids_a)):
-                for cls, mask_row in (("pos", same[qi]), ("neg", ~same[qi] & not_self[qi])):
-                    valid = np.nonzero(mask_row)[0]
-                    if valid.size == 0:
-                        continue
-                    vals = sims[qi][valid]
-                    take = valid[vals >= vals.max() - ROUND_MARGIN]
-                    out["query_id"].extend([ids_a[qi]] * take.size)
-                    out["cls"].extend([cls] * take.size)
-                    out["cand_id"].extend(c_ids[take])
-                    out["sim"].extend(sims[qi][take])
-            if out["query_id"]:
-                yield pd.DataFrame(out)
+            for cls, valid in (("pos", same), ("neg", ~same & not_self)):
+                qi, ci = band_select(sims, valid, 1)
+                yield pd.DataFrame(
+                    {
+                        "query_id": ids_a[qi],
+                        "cls": cls,
+                        "cand_id": c_ids[ci],
+                        "sim": sims[qi, ci],
+                    }
+                )
 
     from pyspark.sql.window import Window
 
@@ -1338,15 +1209,11 @@ def embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     in Spark expressions so rounding matches the oracle exactly; the
     oracle recomputes through the full lateral pair scan.
     """
-    from ..operators.similarity import ROUND_MARGIN, _to_matrix
-
     emb = load(spark, sf_dir, "embeddings")
     anchors = emb.where(F.col("vec_id") < DECON_ANCHOR_MAX_ID)
-    apdf = anchors.select("vec_id", "embedding").toPandas()
-    a_ids = apdf["vec_id"].to_numpy().astype(np.int64)
-    a_mat = _to_matrix(apdf, "embedding")
-    a_norm = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((a_ids, a_norm))
+    bc, _ = broadcast_unit_rows(
+        spark, anchors, "vec_id", "embedding", caller="embedding_decontamination"
+    )
 
     out_schema = "cand_id long, label long, anchor_id long, sim double"
 
@@ -1355,21 +1222,16 @@ def embedding_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            c_ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            c_labels = pdf["label"].to_numpy().astype(np.int64)
-            c_mat = _to_matrix(pdf, "embedding")
-            nc = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = nc @ na.T  # (chunk, |anchors|)
-            out = {"cand_id": [], "label": [], "anchor_id": [], "sim": []}
-            for ci in range(len(c_ids)):
-                vals = sims[ci]
-                take = np.nonzero(vals >= vals.max() - ROUND_MARGIN)[0]
-                out["cand_id"].extend([c_ids[ci]] * take.size)
-                out["label"].extend([c_labels[ci]] * take.size)
-                out["anchor_id"].extend(ids_a[take])
-                out["sim"].extend(vals[take])
-            if out["cand_id"]:
-                yield pd.DataFrame(out)
+            sims = unit_rows(pdf, "embedding") @ na.T  # (chunk, |anchors|)
+            ci, ai = band_select(sims, True, 1)
+            yield pd.DataFrame(
+                {
+                    "cand_id": pdf["vec_id"].to_numpy()[ci],
+                    "label": pdf["label"].to_numpy()[ci],
+                    "anchor_id": ids_a[ai],
+                    "sim": sims[ci, ai],
+                }
+            )
 
     from pyspark.sql.window import Window
 
@@ -1495,14 +1357,16 @@ def _kcenter_oracle_sql(k: int) -> str:
     """Unrolled greedy farthest-point traversal: c0 = min vec_id; round r
     picks argmax of the running min-distance (round(·,6) DESC, vec_id ASC —
     the ann determinism contract) and folds its distance into the running
-    min for the next round."""
+    min for the next round. Each round reads the previous round's d and c
+    twice, so both are ``AS MATERIALIZED``: DuckDB inlines a CTE otherwise,
+    and the work would double every round."""
     parts = [f"""
 WITH e AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings
 ), c0 AS (
   SELECT vec_id, e FROM e ORDER BY vec_id LIMIT 1
-), d1 AS (
+), d1 AS MATERIALIZED (
   SELECT e.vec_id, e.e,
          {_KC_DIST.format(a="e.e", b="c0.e")} AS md
   FROM e CROSS JOIN c0
@@ -1511,13 +1375,13 @@ WITH e AS (
         prior = " UNION ALL ".join(
             [f"SELECT vec_id FROM c0"] + [f"SELECT vec_id FROM c{j}" for j in range(1, r)]
         )
-        parts.append(f""", c{r} AS (
+        parts.append(f""", c{r} AS MATERIALIZED (
   SELECT vec_id, e, md FROM d{r}
   WHERE vec_id NOT IN ({prior})
   ORDER BY round(md, 6) DESC, vec_id LIMIT 1
 )""")
         if r < k - 1:
-            parts.append(f""", d{r + 1} AS (
+            parts.append(f""", d{r + 1} AS MATERIALIZED (
   SELECT d.vec_id, d.e,
          least(d.md, {_KC_DIST.format(a="d.e", b="c.e")}) AS md
   FROM d{r} d CROSS JOIN c{r} c
@@ -1570,7 +1434,7 @@ def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     md = emb.select("vec_id", "e", dist_to(seed["e"]).alias("md")).localCheckpoint(
-        eager=False
+        eager=True
     )
     chosen = {picks[0][1]}
     for r in range(1, KCENTER_K):
@@ -1587,7 +1451,7 @@ def kcenter_coreset_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             md = md.select(
                 "vec_id", "e",
                 F.least("md", dist_to(row["e"])).alias("md"),
-            ).localCheckpoint(eager=False)
+            ).localCheckpoint(eager=True)
     return local_frame(
         spark, picks, "rank long, vec_id long, dist_q6 double"
     ).orderBy("rank")

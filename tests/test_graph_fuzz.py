@@ -16,6 +16,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from big_data__instagram_analysis_spark.operators import graph
 from big_data__instagram_analysis_spark.operators.graph import (
     connected_components,
     pagerank,
@@ -77,17 +78,18 @@ def test_connected_components_vs_union_find(spark, edges):
 )
 @given(edges=st.lists(edge, min_size=1, max_size=25))
 def test_connected_components_distributed_path_vs_union_find(spark, edges):
-    # local_threshold=0 forces the star-round path (r8 hybrid finish would
-    # otherwise close every fuzz-sized graph driver-side) — both paths stay
-    # pinned against the same python union-find oracle.
+    # A zero LOCAL_CC_MAX_EDGES forces the star-round path (the hybrid
+    # finish would otherwise close every fuzz-sized graph driver-side), so
+    # both paths stay pinned against the same python union-find oracle. The
+    # patch lives inside the Hypothesis body: a function-scoped monkeypatch
+    # fixture is not reset between examples.
     non_loop = [(a, b) for a, b in edges if a != b]
     if not non_loop:
         return
     df = spark.createDataFrame(non_loop, "src long, dst long")
-    got = {
-        r.node: r.component
-        for r in connected_components(df, local_threshold=0).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "LOCAL_CC_MAX_EDGES", 0)
+        got = {r.node: r.component for r in connected_components(df).collect()}
     assert got == _union_find_components(non_loop)
 
 

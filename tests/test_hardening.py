@@ -8,15 +8,18 @@ cache/persist reuse — must behave as documented.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from big_data__instagram_analysis_spark.io import load
+from big_data__instagram_analysis_spark.operators import similarity
 from big_data__instagram_analysis_spark.operators.bloom import bloom_prune, build_bloom
 from big_data__instagram_analysis_spark.operators.graph import (
     connected_components,
     pagerank,
 )
+from big_data__instagram_analysis_spark.registry import get_specs
 
 
 def _empty_edges(spark):
@@ -169,19 +172,41 @@ def test_sessionize_differential_fuzz(spark):
     run()
 
 
-def test_broadcast_matrix_guard_rejects_oversized_side(spark, sf_dir, monkeypatch):
-    """The brute-force cosine operators enforce their 'one side fits' memory
-    contract: past BROADCAST_MATRIX_MAX_BYTES they must fail fast with an
-    error naming the sub-quadratic alternatives, not OOM an executor."""
-    import pytest
+_GUARD_CALLERS = {
+    "cosine_topk_allpairs": lambda spark, emb: similarity.cosine_topk_allpairs(
+        emb, spark, k=3
+    ),
+    "cosine_topk_queries": lambda spark, emb: similarity.cosine_topk_queries(
+        emb, emb.where("vec_id % 25 = 0"), spark
+    ),
+    "cosine_threshold_pairs": lambda spark, emb: similarity.cosine_threshold_pairs(
+        emb, spark, threshold=0.4
+    ),
+}
 
-    from big_data__instagram_analysis_spark.io import load
-    from big_data__instagram_analysis_spark.operators import similarity
 
+@pytest.mark.parametrize(
+    "caller",
+    [
+        *_GUARD_CALLERS,
+        "hard_negative_mining",
+        "embedding_decontamination",
+        "matryoshka_truncation_audit",
+        "semantic_dedup_clusters",
+    ],
+)
+def test_broadcast_matrix_guard_rejects_oversized_side(spark, sf_dir, monkeypatch, caller):
+    """Every broadcast of a matrix collected from a frame enforces the
+    brute-force 'one side fits' memory contract: past
+    BROADCAST_MATRIX_MAX_BYTES the caller fails fast, while it builds its
+    DataFrame, with an error naming the sub-quadratic alternatives, not an
+    executor OOM."""
     monkeypatch.setattr(similarity, "BROADCAST_MATRIX_MAX_BYTES", 64)
-    emb = load(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="ann_lsh_bucketed"):
-        similarity.cosine_topk_allpairs(emb, spark, k=3)
+    with pytest.raises(ValueError, match=f"^{caller}: broadcast side .*ann_lsh_bucketed"):
+        if caller in _GUARD_CALLERS:
+            _GUARD_CALLERS[caller](spark, load(spark, sf_dir, "embeddings"))
+        else:
+            get_specs()[caller].fn(spark, sf_dir)
 
 
 def test_decode_audio_wav_roundtrip(spark):
